@@ -35,7 +35,7 @@ ADD_OPENS = [
 SOURCES = ["build.sbt", "project/build.properties", "src/main", "graftbench/build.sbt",
            "graftbench/project/build.properties", "graftbench/src/main"]
 RUN_TIMEOUT_S = 170
-BUILD_TIMEOUT_S = 850
+BUILD_TIMEOUT_S = 700
 
 
 def fail(msg):
