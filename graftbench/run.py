@@ -19,6 +19,7 @@ import shutil
 import signal
 import subprocess
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import oracle  # noqa: E402
@@ -90,6 +91,16 @@ def classpath():
     return cp[-1]
 
 
+def wrong_answers(res):
+    """Wrong answers of the untraced phase and of the traced phase
+    (trace 1), the untimed warm-up ops included."""
+    problems = []
+    for label, phase in (("", res), ("traced: ", res.get("traced", {}))):
+        problems += [label + p for p in phase.get("ops", {}).get("wrong", [])]
+        problems += [f"{label}warm-up: {p}" for p in phase.get("warmup_problems", [])]
+    return problems
+
+
 def spec():
     with open("BENCHMARK.json") as f:
         return json.load(f)
@@ -123,6 +134,7 @@ def main():
         "-cp", cp, "graftbench.Main", "--workload", a.workload, "--seed", str(a.seed),
         "--seconds", str(a.seconds), "--trace", str(a.trace), "--work", work, "--out", out]
     try:
+        t0 = time.monotonic()
         with open(os.path.join(results, tag + ".log"), "w") as log:
             rc = run_bounded(cmd, RUN_TIMEOUT_S, stdout=log, stderr=subprocess.STDOUT,
                              stdin=subprocess.DEVNULL)
@@ -130,13 +142,16 @@ def main():
             fail(f"harness exited {rc} without results; see {results}/{tag}.log")
         with open(out) as f:
             res = json.load(f)
-        problems = list(res.get("ops", {}).get("wrong", []))
+        problems = wrong_answers(res)
         if res.get("error"):
             problems.append(res["error"])
         if rc != 0:
             problems.append(f"harness exit code {rc}")
+        res["harness_s"] = time.monotonic() - t0
         if res.get("oracle_dir"):
+            t0 = time.monotonic()
             verdict = oracle.check_all(res["oracle_dir"], res["data_dir"])
+            res["oracle_s"] = time.monotonic() - t0
             res["oracle"] = {q: {"ok": ok, "detail": d} for q, (ok, d) in verdict.items()}
             problems += [f"{q}: {d}" for q, (ok, d) in verdict.items() if not ok]
             if len(verdict) != res["ops"]["attempted"] // max(1, res["workload_metrics"]["passes"]):

@@ -48,13 +48,15 @@ object CurationBatch {
     }.mkString("|")).toSeq.sorted
 
   /** Run passes over the twelve queries until `seconds` have elapsed
-    * (at least one). The first pass's results are written to `outDir`
-    * for the DuckDB comparison made after the run; every later pass must
-    * return the same rows. */
-  def run(ctx: Ctx, dataDir: String, seconds: Double, log: OpLog, outDir: Option[String]): Seq[Pass] = {
+    * (at least one). Every result must hold the rows of `reference`;
+    * with no reference, the first pass's results become it and are
+    * written to `outDir` for the DuckDB comparison made after the run.
+    * Returns the passes and the reference. */
+  def run(ctx: Ctx, dataDir: String, seconds: Double, log: OpLog, outDir: Option[String],
+          reference: Map[String, Seq[String]]): (Seq[Pass], Map[String, Seq[String]]) = {
     val spark = ctx.spark
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
-    var first: Map[String, Seq[String]] = Map.empty
+    var ref = reference
     val passes = Seq.newBuilder[Pass]
     var n = 0
     while (n == 0 || System.nanoTime() < deadline) {
@@ -72,15 +74,16 @@ object CurationBatch {
       val t1 = System.nanoTime()
       passes += Pass((t1 - t0) / 1e9, (Cpu.processNs() - c0) / 1e9, results.map(_._3), t0, t1)
       spark.catalog.clearCache()
+      val firstRef = ref.isEmpty
       results.foreach { case (q, res, _) =>
         res.foreach { case (schema, rows) =>
-          if (n == 0) {
-            first += q -> canonical(rows)
+          if (firstRef) {
+            ref += q -> canonical(rows)
             outDir.foreach(o => spark.createDataFrame(rows.toSeq.asJava, schema).coalesce(1)
               .write.parquet(s"$o/$q"))
-          } else first.get(q).foreach { want =>
-            log.check(q, canonical(rows) == want, s"pass ${n + 1} differs from pass 1")
-          }
+          } else log.check(q, ref.get(q).contains(canonical(rows)),
+            if (ref.contains(q)) s"pass ${n + 1} differs from the reference pass"
+            else "no reference result to check against")
         }
       }
       n += 1
@@ -89,7 +92,7 @@ object CurationBatch {
       val sql = SparkEntry.oracleSql.filter { case (k, _) => Queries.contains(k) }
       Files.writeString(Paths.get(s"$o/oracle_sql.json"), Json.render(sql))
     }
-    passes.result()
+    (passes.result(), ref)
   }
 
   /** ns per row of each hot kernel: the public function evaluated over

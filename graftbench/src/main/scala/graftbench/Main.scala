@@ -138,6 +138,22 @@ object Workload {
     (s, rng, times :+ t)
   }
 
+  /** Whether to start another op cycle: until `seconds` from now. */
+  private def until(seconds: Double): Int => Boolean = {
+    val deadline = System.nanoTime() + (seconds * 1e9).toLong
+    _ => System.nanoTime() < deadline
+  }
+
+  /** Untimed op cycles on a log and layer of their own; their wrong
+    * answers still fail the run, and their failed ops are reported. */
+  private def warmup(ctx: Ctx)(cycles: (OpLog, Layer) => Unit): Map[String, Any] = {
+    val log = new OpLog(None)
+    val t0 = System.nanoTime()
+    cycles(log, new Layer(ctx, false))
+    Map("warmup_problems" -> log.wrong, "warmup_failed" -> log.errorClasses,
+      "warmup_s" -> (System.nanoTime() - t0) / 1e9)
+  }
+
   private def median(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else Stats.median(xs)
 
   /** End-to-end metrics every workload reports, from its own notion of
@@ -178,14 +194,16 @@ object Workload {
     def measure(ctx: Ctx, seed: Long, seconds: Double, trace: Option[Trace]): Phase = {
       val layer = new Layer(ctx, trace.isDefined)
       val (st, rng, setupS) = setups(seed, trace.isDefined)(r => TsdbMixed.setup(ctx, r, ctx.dir("tsdb")))(_ => ())
-      TsdbMixed.warm(st)
+      val warm = warmup(ctx)((log, layer) => TsdbMixed.run(ctx, st, rng, log, layer)(_ < TsdbMixed.WarmCycles))
       layer.startStore(st)
       val log = new OpLog(trace)
+      val more = until(seconds)
       val c0 = Cpu.processNs()
       val t0 = System.nanoTime()
-      TsdbMixed.run(ctx, st, rng, seconds, log, layer)
+      TsdbMixed.run(ctx, st, rng, log, layer)(more)
       val el = (System.nanoTime() - t0) / 1e9
       val cpu = Cpu.processNs() - c0
+      TsdbMixed.finalCount(st, log)
       layer.finishStore(st)
       val reads = log.ofKind("range_read", "query", "held_read").filter(_.ok).map(_.ms)
       val ok = log.ofKind("publish", "range_read", "query", "held_read").count(_.ok)
@@ -196,7 +214,7 @@ object Workload {
       Phase(setupS, e2e, perLayer, Map("e2e" -> e2e, "ops" -> opsReport(log, reads),
         "workload_metrics" -> (pXX("publish_ms", log.ofKind("publish").filter(_.ok).map(_.ms)) ++
           pXX("range_ms", reads) ++ Map("ops_per_s" -> ok / el)),
-        "rows" -> st.rows.size))
+        "rows" -> st.rows.size) ++ warm)
     }
   }
 
@@ -204,13 +222,18 @@ object Workload {
     def measure(ctx: Ctx, seed: Long, seconds: Double, trace: Option[Trace]): Phase = {
       val layer = new Layer(ctx, trace.isDefined)
       val (st, rng, setupS) = setups(seed, trace.isDefined)(r => ServeRpc.setup(ctx, r, ctx.dir("serve")))(_.close())
-      ServeRpc.warm(st)
+      val warm = try warmup(ctx)((log, layer) => ServeRpc.run(ctx, st, rng, log, layer)(_ < ServeRpc.WarmCycles))
+        catch { case e: Throwable => st.close(); throw e }
       val log = new OpLog(trace)
+      val more = until(seconds)
       val c0 = Cpu.processNs()
       val t0 = System.nanoTime()
-      try ServeRpc.run(ctx, st, rng, seconds, log, layer) finally st.close()
-      val el = (System.nanoTime() - t0) / 1e9
-      val cpu = Cpu.processNs() - c0
+      val (el, cpu) = try {
+        ServeRpc.run(ctx, st, rng, log, layer)(more)
+        val t = ((System.nanoTime() - t0) / 1e9, Cpu.processNs() - c0)
+        ServeRpc.finalCount(st, log)
+        t
+      } finally st.close()
       val reads = log.ofKind("rpc_read").filter(_.ok).map(_.ms)
       val inserts = log.ofKind("rpc_insert").filter(_.ok).map(_.ms)
       val ok = reads.size + inserts.size
@@ -220,7 +243,7 @@ object Workload {
         "serve.jobs_per_insert" -> (if (ins.isEmpty) 0.0 else ins.map(_.jobs).sum.toDouble / ins.size))
       Phase(setupS, e2e, perLayer, Map("e2e" -> e2e, "ops" -> opsReport(log, reads),
         "workload_metrics" -> (pXX("rpc_read_ms", reads) ++ pXX("rpc_insert_ms", inserts) ++
-          Map("ops_per_s" -> ok / el))))
+          Map("ops_per_s" -> ok / el))) ++ warm)
     }
   }
 
@@ -255,12 +278,17 @@ object Workload {
         "streaming.overloaded_batches" -> st.gs.streamingOverloaded.size.toDouble)
       Phase(setupS, e2e, perLayer, Map("e2e" -> e2e, "ops" -> opsReport(log, res.freshMs),
         "workload_metrics" -> (pXX("freshness_ms", res.freshMs) ++ Map("drain_rows_per_s" -> drainRate,
-          "drain_rows_per_s.samples" -> res.drainRowsPerS, "publisher_late_ms.max" -> res.lateMaxMs)),
+          "drain_rows_per_s.samples" -> res.drainRowsPerS, "freshness_ms.samples" -> res.freshMs,
+          "publisher_late_ms.max" -> res.lateMaxMs)),
         "rows" -> st.rows.size))
     }
   }
 
   object Curation extends Workload {
+    // the untraced phase's first pass; the traced phase, which runs
+    // after it in the same JVM, must return the same rows
+    private var reference = Map.empty[String, Seq[String]]
+
     def measure(ctx: Ctx, seed: Long, seconds: Double, trace: Option[Trace]): Phase = {
       val tables = Gen.curationTables(seed, CurationBatch.Sf)
       val dir = CurationBatch.write(ctx, tables, ctx.dir("curation"))
@@ -268,7 +296,9 @@ object Workload {
         CurationBatch.open(ctx, dir, tables.map(_._1)))(_ => ())
       val log = new OpLog(trace)
       val out = if (trace.isDefined) None else Some(ctx.dir("results"))
-      val passes = CurationBatch.run(ctx, dir, seconds, log, out)
+      val (passes, ref) = CurationBatch.run(ctx, dir, seconds, log, out,
+        if (trace.isDefined) reference else Map.empty)
+      reference = ref
       val qms = passes.flatMap(_.queryMs)
       val wall = passes.map(_.wallS)
       val cpuS = passes.map(_.cpuS)

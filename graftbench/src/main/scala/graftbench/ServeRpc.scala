@@ -41,8 +41,8 @@ object ServeRpc {
     st
   }
 
-  /** One remote read, so the measured phase sees a warm JVM. */
-  def warm(st: State): Unit = remote(st.conn, selectSql(Gen.T0, Gen.T0 + HistoryBuckets * Gen.HourS))
+  // untimed op cycles before the measured ones, so they see a warm JVM
+  val WarmCycles = 2
 
   def selectSql(from: Long, to: Long): String =
     s"SELECT event_type, count(*) AS n, sum(CAST(round(value * 100) AS BIGINT)) AS c " +
@@ -60,9 +60,8 @@ object ServeRpc {
     } finally st.close()
   }
 
-  def run(ctx: Ctx, st: State, rng: SplittableRandom, seconds: Double, log: OpLog,
-          layer: Layer): Unit = {
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
+  /** Run op cycles while `more(cycles run so far)`. */
+  def run(ctx: Ctx, st: State, rng: SplittableRandom, log: OpLog, layer: Layer)(more: Int => Boolean): Unit = {
     val end = Gen.T0 + HistoryBuckets * Gen.HourS
     def read(hours: Int): Unit = {
       val to = Gen.T0 + (hours + rng.nextInt(HistoryBuckets - hours + 1)) * Gen.HourS
@@ -90,13 +89,18 @@ object ServeRpc {
     }
     // whole cycles of four reads of fixed widths and one insert, so
     // every run measures the same mix
-    while (System.nanoTime() < deadline) {
+    var i = 0
+    while (more(i)) {
       read(1); read(6); insert(); read(12); read(3)
+      i += 1
     }
+  }
+
+  /** The topic must hold every row published and inserted. */
+  def finalCount(st: State, log: OpLog): Unit =
     log.run("final_count")(remote(st.conn,
       s"SELECT 'all', count(*), 0L FROM graft.$Topic")).foreach { got =>
       val n = got.get("all").map(_._1).getOrElse(-1L)
       log.check("final_count", n == st.rows.size, s"topic holds $n rows, inserted ${st.rows.size}")
     }
-  }
 }

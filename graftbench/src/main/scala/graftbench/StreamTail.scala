@@ -23,18 +23,21 @@ import graft.streaming.TopicStream
   * stream's output wrong rather than slow. */
 object StreamTail {
   val Topic = "ev"
-  val RowsPerBatch = 33
-  // below the ~4 batches/s one publisher sustains beside a live subscriber
+  // 2,000 rows/s: about half of the ~4,000 rows/s the subscriber drains
+  // in catch-up, at a batch rate below the ~4 batches/s one publisher
+  // sustains beside a live subscriber
+  val RowsPerBatch = 667
   val BatchesPerSecond = 3.0
   val CatchUps = 3
-  val BacklogBatches = 5
-  val BacklogRowsPerBatch = 400
+  val BacklogBatches = 2
+  val BacklogRowsPerBatch = 2500
   val InitialRows = 200
+  // open-loop publishing before the measured part of the steady phase
+  val WarmS = 5.0
   // event time advances one minute per batch; disorder stays well
   // inside windowedStats' 30-minute watermark delay
   val StepS = 60L
   val DisorderS = 600L
-  val SteadyShare = 0.8
 
   /** The sink's view: windows upserted by every micro-batch, and after
     * each batch, when it ended and how many rows the windows cover. */
@@ -112,18 +115,21 @@ object StreamTail {
     val lateMs = mutable.ArrayBuffer[Double]()
     val period = (1e9 / BatchesPerSecond).toLong
     val t0 = System.nanoTime()
-    val steadyEnd = t0 + (seconds * SteadyShare * 1e9).toLong
+    // batches due in the first WarmS seconds warm the subscriber and are
+    // not measured
+    val measureFrom = t0 + (WarmS * 1e9).toLong
+    val steadyEnd = measureFrom + (seconds * 1e9).toLong
     val publisher = new Thread(() => {
       var i = 0
       while (t0 + i * period < steadyEnd) {
         val due = t0 + i * period
         val wait = due - System.nanoTime()
         if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-        lateMs += math.max(0L, System.nanoTime() - due) / 1e6
+        if (due >= measureFrom) lateMs += math.max(0L, System.nanoTime() - due) / 1e6
         val evs = batch(st, pubRng, RowsPerBatch)
         if (log.run("publish")(st.gs.publish(Topic, Gen.frame(ctx.spark, evs), "ts")).isDefined) {
           st.rows ++= evs
-          sent += ((due, st.rows.size.toLong))
+          if (due >= measureFrom) sent += ((due, st.rows.size.toLong))
         }
         i += 1
       }

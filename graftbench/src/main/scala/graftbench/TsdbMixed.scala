@@ -44,13 +44,8 @@ object TsdbMixed {
     st.rows ++= hist
     st
   }
-
-
-  /** One read of each kind, so the measured phase sees a warm JVM. */
-  def warm(st: State): Unit = {
-    aggOf(st.gs.store.readRange(st.fqn, Gen.T0, st.clock, "ts")).collect()
-    st.gs.query(s"SELECT count(*) FROM $Topic").collect()
-  }
+  // untimed op cycles before the measured ones, so they see a warm JVM
+  val WarmCycles = 1
 
   private def aggOf(df: DataFrame): DataFrame =
     df.groupBy(col("event_type"))
@@ -59,12 +54,9 @@ object TsdbMixed {
   private def asTruth(rows: Array[Row]): Map[String, (Long, Long)] =
     rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
 
-  /** Run whole op cycles until `seconds` have passed, then check the
-    * topic's final count. */
-  def run(ctx: Ctx, st: State, rng: SplittableRandom, seconds: Double, log: OpLog,
-          layer: Layer): Unit = {
+  /** Run whole op cycles while `more(cycles run so far)`. */
+  def run(ctx: Ctx, st: State, rng: SplittableRandom, log: OpLog, layer: Layer)(more: Int => Boolean): Unit = {
     val gs = st.gs
-    val deadline = System.nanoTime() + (seconds * 1e9).toLong
 
     def nextBatch(): Vector[Ev] = {
       st.clock += PublishStepS
@@ -135,9 +127,13 @@ object TsdbMixed {
     // compaction are coordinated.
     val cycle: Seq[() => Unit] = Seq(() => publish(nextBatch()), () => rangeRead(1),
       () => query(6), () => heldRead(), () => rangeRead(24), () => rangeRead(6))
-    while (System.nanoTime() < deadline) cycle.foreach(_())
-    log.run("final_count")(gs.table(Topic).count()).foreach { n =>
+    var i = 0
+    while (more(i)) { cycle.foreach(_()); i += 1 }
+  }
+
+  /** The topic must hold every row published. */
+  def finalCount(st: State, log: OpLog): Unit =
+    log.run("final_count")(st.gs.table(Topic).count()).foreach { n =>
       log.check("final_count", n == st.rows.size, s"topic holds $n rows, published ${st.rows.size}")
     }
-  }
 }
