@@ -57,15 +57,31 @@ def source_stamp():
 
 
 def run_bounded(cmd, timeout, **kw):
-    """Run `cmd` in its own process group; on timeout kill the group and
-    wait for it, so no process outlives the benchmark."""
+    """Run `cmd` in its own process group; on timeout, or when the
+    benchmark itself is terminated, kill the group and wait for it, so no
+    process outlives the benchmark."""
     p = subprocess.Popen(cmd, start_new_session=True, **kw)
+
+    def kill_group():
+        try:
+            os.killpg(p.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        p.wait()
+
+    def on_signal(signum, _frame):
+        kill_group()
+        sys.exit(128 + signum)
+
+    previous = {s: signal.signal(s, on_signal) for s in (signal.SIGTERM, signal.SIGINT)}
     try:
         return p.wait(timeout=timeout)
     except subprocess.TimeoutExpired:
-        os.killpg(p.pid, signal.SIGKILL)
-        p.wait()
+        kill_group()
         return None
+    finally:
+        for s, h in previous.items():
+            signal.signal(s, h)
 
 
 def classpath():

@@ -278,7 +278,8 @@ object Workload {
         "streaming.overloaded_batches" -> st.gs.streamingOverloaded.size.toDouble)
       Phase(setupS, e2e, perLayer, Map("e2e" -> e2e, "ops" -> opsReport(log, res.freshMs),
         "workload_metrics" -> (pXX("freshness_ms", res.freshMs) ++ Map("drain_rows_per_s" -> drainRate,
-          "drain_rows_per_s.samples" -> res.drainRowsPerS, "freshness_ms.samples" -> res.freshMs,
+          "drain_rows_per_s.samples" -> res.drainRowsPerS,
+          "drain_rows_per_s.warm_samples" -> res.warmDrainRowsPerS, "freshness_ms.samples" -> res.freshMs,
           "publisher_late_ms.max" -> res.lateMaxMs)),
         "rows" -> st.rows.size))
     }

@@ -15,24 +15,27 @@ import graft.streaming.TopicStream
 /** stream-tail: an open loop. A publisher thread publishes event batches
   * at a fixed rate while `subscribe` feeds `TopicStream.windowedStats`
   * into a foreachBatch sink that upserts the emitted windows; then a
-  * catch-up phase, three times, stops the subscriber, publishes a fixed
-  * backlog and restarts it from its checkpoint. The only workload where micro-batch
-  * planning, file-source listing and streaming state are on the
-  * critical path. No compaction cadence is registered: `subscribe`
-  * re-delivers compacted rows (a known defect), which would make the
-  * stream's output wrong rather than slow. */
+  * catch-up phase, five times (the first two untimed), stops the
+  * subscriber, publishes a fixed backlog and restarts it from its
+  * checkpoint. The only workload where micro-batch planning, file-source listing and
+  * streaming state are on the critical path. No compaction cadence is
+  * registered: `subscribe` re-delivers compacted rows (a known defect),
+  * which would make the stream's output wrong rather than slow. */
 object StreamTail {
   val Topic = "ev"
-  // 2,000 rows/s: about half of the ~4,000 rows/s the subscriber drains
-  // in catch-up, at a batch rate below the ~4 batches/s one publisher
-  // sustains beside a live subscriber
+  // 2,000 rows/s: about a third of the ~6,000 rows/s the subscriber
+  // drains in catch-up. One publisher sustains ~4 batches/s beside a live
+  // subscriber; at 3 x 1,000 rows/s it already ran 50-70 ms late
   val RowsPerBatch = 667
   val BatchesPerSecond = 3.0
-  val CatchUps = 3
+  // the first two catch-ups warm the restart path and are not measured:
+  // a drain still speeds up over the first few catch-ups of a run
+  val CatchUps = 5
+  val WarmCatchUps = 2
   val BacklogBatches = 2
   val BacklogRowsPerBatch = 2500
   val InitialRows = 200
-  // open-loop publishing before the measured part of the steady phase
+  // untimed open-loop publishing before the timed part
   val WarmS = 5.0
   // event time advances one minute per batch; disorder stays well
   // inside windowedStats' 30-minute watermark delay
@@ -64,7 +67,8 @@ object StreamTail {
     def all: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = synchronized(events.toList)
   }
 
-  final case class Result(freshMs: Seq[Double], drainRowsPerS: Seq[Double], lateMaxMs: Double)
+  final case class Result(freshMs: Seq[Double], drainRowsPerS: Seq[Double],
+                          warmDrainRowsPerS: Seq[Double], lateMaxMs: Double)
 
   final class State(val gs: GraftSession, val dir: String, val sink: Sink) {
     val rows = mutable.ArrayBuffer[Ev]()
@@ -92,6 +96,12 @@ object StreamTail {
     st.sink.absorbed >= st.rows.size
   }
 
+  /** Let the running query commit its last batch, and any no-data batch
+    * that advances the watermark, before it is stopped: a query stopped
+    * between its sink call and its commit re-runs that batch on restart,
+    * which would put a second micro-batch into some catch-ups only. */
+  def quiesce(st: State): Unit = if (st.query != null) st.query.processAllAvailable()
+
   def setup(ctx: Ctx, rng: SplittableRandom, dir: String): State = {
     val st = new State(new GraftSession(ctx.spark, dir), dir, new Sink)
     val init = Gen.events(rng, InitialRows, Gen.T0, Gen.T0 + Gen.HourS)
@@ -107,41 +117,56 @@ object StreamTail {
     Gen.events(rng, n, st.clock - DisorderS, st.clock)
   }
 
-  def run(ctx: Ctx, st: State, rng: SplittableRandom, seconds: Double, log: OpLog,
-          layer: Layer, progress: Progress): Result = {
-    val pubRng = rng.split()
-    // (due ns, cumulative rows once published)
+  /** Open-loop publishing for `seconds` at BatchesPerSecond. A publisher
+    * that fell behind publishes every batch already due in one call, as a
+    * client flushing its buffer would. Published one at a time (~250 ms
+    * each against the 333 ms period), overdue batches would take many
+    * periods to clear, and one stall would raise the freshness of most of
+    * a run. Returns each batch's (due ns, cumulative rows once published)
+    * and how late, in ms, the publisher started it. */
+  private def openLoop(ctx: Ctx, st: State, rng: SplittableRandom, seconds: Double,
+                       log: OpLog): (Seq[(Long, Long)], Seq[Double]) = {
     val sent = mutable.ArrayBuffer[(Long, Long)]()
     val lateMs = mutable.ArrayBuffer[Double]()
     val period = (1e9 / BatchesPerSecond).toLong
     val t0 = System.nanoTime()
-    // batches due in the first WarmS seconds warm the subscriber and are
-    // not measured
-    val measureFrom = t0 + (WarmS * 1e9).toLong
-    val steadyEnd = measureFrom + (seconds * 1e9).toLong
+    val end = t0 + (seconds * 1e9).toLong
     val publisher = new Thread(() => {
       var i = 0
-      while (t0 + i * period < steadyEnd) {
-        val due = t0 + i * period
-        val wait = due - System.nanoTime()
+      while (t0 + i * period < end) {
+        val wait = t0 + i * period - System.nanoTime()
         if (wait > 0) Thread.sleep(wait / 1000000, (wait % 1000000).toInt)
-        if (due >= measureFrom) lateMs += math.max(0L, System.nanoTime() - due) / 1e6
-        val evs = batch(st, pubRng, RowsPerBatch)
+        // at least batch i, which is due by now
+        val now = math.max(System.nanoTime(), t0 + i * period)
+        val dues = Iterator.from(i).map(t0 + _ * period).takeWhile(d => d <= now && d < end).toVector
+        lateMs ++= dues.map(d => (now - d) / 1e6)
+        val evs = dues.flatMap(_ => batch(st, rng, RowsPerBatch))
         if (log.run("publish")(st.gs.publish(Topic, Gen.frame(ctx.spark, evs), "ts")).isDefined) {
           st.rows ++= evs
-          if (due >= measureFrom) sent += ((due, st.rows.size.toLong))
+          sent ++= dues.map(d => (d, st.rows.size.toLong))
         }
-        i += 1
+        i += dues.size
       }
     }, "graftbench-publisher")
     publisher.start()
     publisher.join()
+    (sent.toSeq, lateMs.toSeq)
+  }
+
+  def run(ctx: Ctx, st: State, rng: SplittableRandom, seconds: Double, log: OpLog,
+          layer: Layer, progress: Progress): Result = {
+    val pubRng = rng.split()
+    // untimed publishing warms the publish and micro-batch paths; the
+    // timed open loop follows without a pause
+    openLoop(ctx, st, pubRng, WarmS, log)
+    val (sent, lateMs) = openLoop(ctx, st, pubRng, seconds, log)
     log.run("drain_steady")(require(awaitAbsorbed(st, 60), "steady phase never drained"))
     val ends = st.sink.endsSnapshot
 
-    // catch-up, three times: stop, publish a backlog, restart from the
-    // checkpoint and time the drain
-    val drains = (1 to CatchUps).flatMap { _ =>
+    // catch-up: stop, publish a backlog, restart from the checkpoint and
+    // time the drain
+    val drains = (1 to CatchUps).map { _ =>
+      quiesce(st)
       st.stop()
       val before = st.rows.size
       (0 until BacklogBatches).foreach { _ =>
@@ -155,6 +180,7 @@ object StreamTail {
         require(awaitAbsorbed(st, 120), "catch-up never drained")
       }.map(_ => (st.rows.size - before) / ((System.nanoTime() - c0) / 1e9))
     }
+    val (warmDrains, measuredDrains) = drains.splitAt(WarmCatchUps)
 
     // correctness: absorbed total, ground truth, and a batch recomputation
     log.check("absorbed", st.sink.absorbed == st.rows.size,
@@ -173,9 +199,9 @@ object StreamTail {
     }
     st.stop()
 
-    // freshness: creation stamp to the end of the first micro-batch
-    // after which the sink covers the batch
-    val fresh = sent.toSeq.flatMap { case (due, cum) =>
+    // freshness: due time to the end of the first micro-batch after
+    // which the sink covers the batch
+    val fresh = sent.flatMap { case (due, cum) =>
       ends.find(e => e._3 >= cum && e._2 >= due).map(e => (e._2 - due) / 1e6)
     }
     if (layer.tracing) {
@@ -187,6 +213,6 @@ object StreamTail {
         }
       }
     }
-    Result(fresh, drains, lateMs.maxOption.getOrElse(0.0))
+    Result(fresh, measuredDrains.flatten, warmDrains.flatten, lateMs.maxOption.getOrElse(0.0))
   }
 }
