@@ -1,9 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every `SparkEntry.queries`
-  * entry against `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
-  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
+  * entry against `SPARK_GRAFT_SF_DIR`, writes the full per-query JSON
+  * `{"metric":"total","value":N,"unit":"sec","queries":{...},"errors":{...},"sf":...}`
+  * to `bench_results.json`, and ends stdout with a short summary line
+  * `{"metric":"total","value":N,"unit":"sec","families":{"dd":..},"errors":n,...}`
+  * (per-family sums by query-name prefix) that a log scraper can parse.
   *
   * Methodology (round-2 hardening):
   *   - each query runs `SPARK_GRAFT_BENCH_RUNS` times (default 3) and
@@ -18,15 +20,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // Warm the session (task scheduling, codegen compiler, parquet
     // reader pools) so the first measured query isn't charged for
     // one-time JVM initialization.
@@ -48,22 +43,11 @@ object Bench {
     // generated at (join strategies are stats-based, so comparing at
     // the bench SF would false-alarm). Drift lands in the errors
     // object => exit 1 after the timings print.
-    val goldenFile = new java.io.File("/root/repo/src/test/resources/plan_golden.txt")
     val goldenDir = "/root/testdata/sf0.001"
-    if (goldenFile.exists && new java.io.File(goldenDir).exists
+    if (PlanShape.goldenFile.exists && new java.io.File(goldenDir).exists
         && !sys.env.contains("SPARK_GRAFT_BENCH_NO_PLANCHECK")) {
-      val markers = Seq(
-        "exch" -> "Exchange hashpartitioning",
-        "range" -> "Exchange rangepartitioning",
-        "win" -> "Window [",
-        "smj" -> "SortMergeJoin",
-        "bhj" -> "BroadcastHashJoin",
-        "bnlj" -> "BroadcastNestedLoopJoin",
-        "cache" -> "InMemoryTableScan")
-      def count(hay: String, needle: String): Int =
-        hay.sliding(needle.length).count(_ == needle)
       val golden = {
-        val src = scala.io.Source.fromFile(goldenFile, "UTF-8")
+        val src = scala.io.Source.fromFile(PlanShape.goldenFile, "UTF-8")
         try src.getLines().map { l =>
           val i = l.indexOf(' '); l.substring(0, i) -> l.substring(i + 1)
         }.toMap finally src.close()
@@ -71,9 +55,8 @@ object Bench {
       spark.sharedState.cacheManager.clearCache()
       names.foreach { name =>
         golden.get(name).foreach { pinned =>
-          val p = SparkEntry.queries(name)(spark, goldenDir)
-            .queryExecution.executedPlan.toString
-          val live = markers.map { case (k, m) => s"$k=${count(p, m)}" }.mkString(" ")
+          val live = PlanShape.signature(SparkEntry.queries(name)(spark, goldenDir)
+            .queryExecution.executedPlan.toString)
           if (live != pinned)
             errors.getOrElseUpdate(name,
               s"planDrift: live[$live] != golden[$pinned]")
@@ -112,21 +95,42 @@ object Bench {
       name -> med
     }
 
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val qs = medians.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    val total = medians.collect { case (_, v) if v >= 0 => v }.sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"queries":$qs,"errors":$errJson,"sf":"$sfDir"}"""
-    println(json)
-    // stdout of a Spark run is log-interleaved and has broken the
-    // driver's parse before (BENCH_r04 "parsed: null") — also land
-    // the same line in a file that round-over-round tooling can read
-    // without scraping log tails
+    // stdout of a Spark run is log-interleaved and a ~7 KB last line
+    // has defeated log scrapers before (BENCH_r04 "parsed: null"): the
+    // file carries the full result, stdout ends with the short summary
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_results.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (resultLine(medians, errors, runs, sfDir) + "\n")
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Exception => System.err.println(s"bench: could not write $out: $e") }
+    errors.foreach { case (k, v) => System.err.println(s"bench: $k failed: $v") }
+    println(summaryLine(medians, errors.size, runs, sfDir))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** A failed query's median is -1 and counts in no total. */
+  private def total(medians: Seq[(String, Double)]): Double =
+    medians.collect { case (_, v) if v >= 0 => v }.sum
+
+  /** The full result: every query's median and every error message. */
+  private[graft] def resultLine(medians: Seq[(String, Double)],
+                                errors: collection.Map[String, String],
+                                runs: Int, sfDir: String): String = {
+    val qs = medians.map { case (k, v) => s"${Json.string(k)}:$v" }.mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => s"${Json.string(k)}:${Json.string(v)}" }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${total(medians)},"unit":"sec","runs":$runs,""" +
+      s""""queries":$qs,"errors":$errJson,"sf":${Json.string(sfDir)}}"""
+  }
+
+  /** The stdout summary: the total, its sums per query family (the
+    * name's letter prefix: dd, ss, tx, q, ...) and the error count. */
+  private[graft] def summaryLine(medians: Seq[(String, Double)], nErrors: Int,
+                                 runs: Int, sfDir: String): String = {
+    val families = medians.groupBy(_._1.takeWhile(_.isLetter)).toSeq.sortBy(_._1)
+      .map { case (f, ms) => s"${Json.string(f)}:${total(ms)}" }.mkString("{", ",", "}")
+    s"""{"metric":"total","value":${total(medians)},"unit":"sec","runs":$runs,""" +
+      s""""families":$families,"errors":$nErrors,"sf":${Json.string(sfDir)}}"""
   }
 }

@@ -1,7 +1,15 @@
 package graft
 import org.apache.spark.sql.SparkSession
-/** Dev utility: time one query (args: name sfDir [explain]) or dump
-  * plans for PLANS.md (args: --plans). */
+/** Dev utility. Modes:
+  *   - `<query> <sfDir> [explain]` — time one registered query,
+  *     construction included (several queries run actions while their
+  *     frame is built), through a noop write; `explain` also prints the
+  *     formatted plan;
+  *   - `--plans` — dump every registered query's plan for PLANS.md;
+  *   - `--scale [sfDir] [q1,q2,...]` — per-query shuffle profile (SCALE.md);
+  *   - `--scalegen`, `--scalegen-part`, `--scalegen-events` — write the
+  *     decorrelated blowup corpora the scaling measurements run on.
+  * Kernel A/Bs are graftbench's trace-1 `plans.<fn>.ns_per_row`. */
 object DevProbe {
   /** Decorrelated `events` blowup: each of the `mult` replicas re-keys
     * user_id and event_id (`old*mult+rep`), keeping every user's event
@@ -29,10 +37,7 @@ object DevProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions","16")
-      .config("spark.sql.session.timeZone","UTC").config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession()
     if (args(0) == "--plans") {
       // EVERY registered query, alphabetically — derived from the
       // registry itself so PLANS.md can never trail a new query (the
@@ -48,56 +53,15 @@ object DevProbe {
         }
     } else if (args(0) == "--scale") {
       // Measured scale profile: shuffle volume, map-side combine
-      // amplification, per-task skew, and spill for the headline
-      // operators at the given SF — evidence for the 100x question,
-      // not claims. Output = markdown table (SCALE.md).
+      // amplification, per-task skew, and spill for every registered
+      // query at the given SF — evidence for the 100x question, not
+      // claims. Output = markdown table (SCALE.md).
       val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val names = Seq(
-        "tx05_char_ngrams",
-        "q01_agg", "q04_broadcast_join", "q07_window_rank",
-        "q23_window_dist", "ts03_asof_join", "ts12_asof_native",
-        "dd01_exact", "dd02_minhash_lsh", "dd06_dup_clusters",
-        "dd09_cc_star", "dd10_source_overlap", "dd11_hll_overlap",
-        "ss02_lsh_ann", "ss05_ivf_probe", "ss09_kmeans_iter",
-        "dd12_incremental", "ss12_incremental_ann",
-        "tx11_decontam", "tx12_vocab", "sp03_pack_sequences",
-        "px02_mixture_budget", "sp04_temperature", "px04_source_report",
-        "v16_tensor3d", "mm03_sample_assembly",
-        "sp06_shard", "px05_split_leakage", "tx14_quality_quartiles",
-        "dd13_theta_overlap", "dd14_bloom_incremental",
-        "ss13_pq_ann", "tx15_heavy_hitters", "mm04_binary_dedup",
-        "ss14_pq_train", "ss15_pq_incremental", "ss16_ivfpq",
-        "v18_masked_fill", "v19_string_tensor", "v20_time_tensor",
-        "ts19_ewma", "tx16_line_dedup", "tx17_quality_classifier",
-        "ss17_recall_report", "dd15_keep_best", "ss18_filtered_ann",
-        "ss19_semantic_decontam",
-        "q29_recursive", "sp07_epoch_order", "tx18_substring_spans",
-        "tx19_bpe_merge", "ss20_pca_power", "q30_json_extract", "tx20_bpe_apply",
-        "tx21_chunk", "tx22_tfidf_search", "ss21_hybrid_rrf",
-        "sp08_anneal_schedule", "ts20_asof_tolerance",
-        "ss22_ivfpq_batch", "tx23_bm25", "dd16_winnowing",
-        "ts21_funnel", "ts22_retention", "ts23_top_paths",
-        "tx24_substring_rewrite", "tx25_bpe_train", "tx26_substring_keepfirst",
-        "ss23_kmeans_train",
-        "ts24_transitions", "ts25_funnel_timing", "ts26_ab_lift",
-        "ts27_rfm",
-        "ts28_changepoint", "ts29_assoc", "ss25_mrl_prefix",
-        "ss26_cell_balance", "dd17_fuzzy_match", "mm05_format_sniff",
-        "ts30_attribution", "ss27_range_search", "tx27_quality_train",
-        "mm07_video_meta", "ts36_autocorr", "ts37_dow_profile",
-        "ts38_week_over_week", "sp10_curriculum", "sp11_pack_audit",
-        "sp12_interleave_mix", "px06_dataset_card", "ss32_ood_audit",
-        "ss33_pagerank", "tx30_vocab_coverage", "dd21_cluster_census",
-        "tx32_ppl_tiers", "sp13_epoch_budget", "mm08_pixel_hash",
-        "mm09_image_neardup", "mm10_pixel_stats", "ts39_theil_sen",
-        "tx33_gopher_gate", "ss35_embed_drift", "dd22_cdc_chunks",
-        "mm11_audio_stats", "ss36_mrl_curve", "dd23_band_curve",
-        "tx34_lang_confusion", "ts40_slo_bands")
-      // optional third arg: comma-separated subset of the list above
+      // optional third arg: comma-separated subset of the registry
       val only = args.lift(2).map(_.split(",").toSet)
       println("| query | input rows | shuffle rows written | amplification ‰ | max-task shuffle share ‰ | spill MB |")
       println("|---|---|---|---|---|---|")
-      names.filter(n => only.forall(_.contains(n))).foreach { n =>
+      SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n))).foreach { n =>
         spark.sharedState.cacheManager.clearCache()
         val (_, m) = Metrics.measure(spark) {
           SparkEntry.queries(n)(spark, d)
@@ -106,282 +70,6 @@ object DevProbe {
         println(s"| $n | ${m.inputRecords} | ${m.shuffleRecordsWritten} | " +
           s"${m.shuffleAmplificationMilli} | ${m.shuffleSkewMilli} | " +
           s"${(m.diskBytesSpilled + m.memoryBytesSpilled) / (1024 * 1024)} |")
-      }
-    } else if (args(0) == "--mrlfixed") {
-      // Fixed-batch ss36 blowup row (args: --mrlfixed <sfDir> <mult>):
-      // the registered query's batch is a 1/50 id slice, so the
-      // blowup harness grows it 2.5x alongside the 64x corpus
-      // (ids < 5000 re-key to 64 replicas of old ids < 78) and the
-      // Q x N audit frame grows ~160x. This mode HOLDS the batch at
-      // its 1x membership (vec_id % (50*mult) == 7*mult — the rep-0
-      // replicas, identical embeddings) so the endpoints read the
-      // per-query audit cost, which is corpus-LINEAR by design.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val mult = args.lift(2).map(_.toLong).getOrElse(1L)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      val qs = e.filter(col("vec_id") % lit(50L * mult) === lit(7L * mult)
-          && col("vec_id") < lit(5000L * mult))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      println(s"nq=${qs.count()}")
-      val t0 = System.nanoTime()
-      // the SAME kernel the registered query runs (mrlAuditOf) — the
-      // probe can never silently measure a different pipeline
-      operators.Similarity.mrlAuditOf(e, qs)
-        .write.format("noop").mode("overwrite").save()
-      println(s"AUDIT=done in ${(System.nanoTime() - t0) / 1e9}s")
-    } else if (args(0) == "--mrlsampled") {
-      // Sampled-truth ss36 blowup row (args: --mrlsampled <sfDir>
-      // <mult>): same fixed 1x batch as --mrlfixed, but the truth
-      // corpus routes through mrlSampleOneInFor — the form a 100 TB
-      // deployment actually runs. The audit frame is Q(fixed) ×
-      // ~25k(sampled) at every scale; the only corpus-linear term
-      // left is the one-pass sample filter scan.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val mult = args.lift(2).map(_.toLong).getOrElse(1L)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      val qs = e.filter(col("vec_id") % lit(50L * mult) === lit(7L * mult)
-          && col("vec_id") < lit(5000L * mult))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val n = e.count()
-      val s1 = operators.Similarity.mrlSampleOneInFor(n)
-      println(s"nq=${qs.count()} n=$n sampleOneIn=$s1")
-      val t0 = System.nanoTime()
-      operators.Similarity.mrlAuditOf(e, qs, s1)
-        .write.format("noop").mode("overwrite").save()
-      println(s"AUDIT=done in ${(System.nanoTime() - t0) / 1e9}s")
-    } else if (args(0) == "--mrlagree") {
-      // Sampled-vs-exact ss36 agreement probe (args: --mrlagree
-      // <sfDir> [sampleOneIn]): mean recall milli per prefix width,
-      // exact vs sampled — the numbers ApiSpec pins.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val s1 = args.lift(2).map(_.toInt).getOrElse(4)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      val qs = e.filter(col("vec_id") % 50 === 7 && col("vec_id") < 5000)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      def means(sample: Int): (Long, Long, Long, Long) = {
-        val r = operators.Similarity.mrlCurveReport(
-            operators.Similarity.mrlAuditOf(e, qs, sample))
-          .agg(count(lit(1)), avg(col("recall8_milli")),
-            avg(col("recall16_milli")), avg(col("recall32_milli"))).head
-        (r.getLong(0), r.getDouble(1).round, r.getDouble(2).round,
-          r.getDouble(3).round)
-      }
-      println(s"exact=${means(1)}")
-      println(s"sampled($s1)=${means(s1)}")
-    } else if (args(0) == "--mm09entropy") {
-      // mm09 appearance-entropy probe (args: --mm09entropy <sfDir>):
-      // distinct aHash classes vs docs, pair volume at radius 3 —
-      // the numbers behind the saturation contract's threshold.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val hashed = operators.Multimodal.pixelHashFrame(spark, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nDocs = hashed.count()
-      val classes = hashed.groupBy(col("hi"), col("lo"))
-        .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_docs"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nClasses = classes.count()
-      val radius = args.lift(2).map(_.toInt)
-        .getOrElse(operators.Multimodal.imageRadiusFor(nClasses, nDocs))
-      val t0 = System.nanoTime()
-      val pairs = operators.Multimodal.imageNeardupPairs(classes, radius).count()
-      println(s"docs=$nDocs classes=$nClasses " +
-        s"ratioMilli=${nClasses * 1000 / math.max(1, nDocs)} radius=$radius " +
-        s"pairs=$pairs pairTime=${(System.nanoTime() - t0) / 1e9}s")
-    } else if (args(0) == "--ss22fixed") {
-      // Fixed-batch ss22 blowup row (args: --ss22fixed <sfDir> <mult>):
-      // the bench query's batch is a 1/50 id slice, so the blowup
-      // harness grows it WITH the corpus (64x data = 64x batch x 64x
-      // cells). To evidence the serving claim (cost ∝ batch x nprobe x
-      // cell size, corpus only via cell size), this mode HOLDS the
-      // batch at its 1x membership: --scalegen re-keys ids as
-      // old*mult+rep, so vec_id % (50*mult) == 7*mult selects exactly
-      // the rep-0 replicas of the 1x batch (identical embeddings,
-      // constant count) at every scale. Index build is timed apart
-      // from the probe — the corpus-proportional encode belongs to
-      // build-once, the per-query claim is about the probe.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val mult = args.lift(2).map(_.toLong).getOrElse(1L)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      val t0 = System.nanoTime()
-      val (cents, cb, coded0) = operators.Similarity.ivfpqIndex(e)
-      // serving stores the coded index (cell-partitioned, RAM-resident
-      // codes); persist so the probe is timed against the index, not
-      // a lazy re-encode of the corpus
-      val coded = coded0.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      coded.write.format("noop").mode("overwrite").save()
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      val qs = e.filter(col("vec_id") % lit(50L * mult) === lit(7L * mult))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val nq = qs.count()
-      val t1 = System.nanoTime()
-      operators.Similarity.ivfpqProbe(coded, cents, cb, qs,
-          nprobe = 2, shortlist = 10, k = 3, excludeSelf = true)
-        .write.format("noop").mode("overwrite").save()
-      val tProbe = (System.nanoTime() - t1) / 1e9
-      println(f"ss22fixed mult=$mult batch=$nq build=$tBuild%.2f s probe=$tProbe%.2f s")
-    } else if (args(0) == "--wcprobe") {
-      // Word-count expression A/B (args: --wcprobe <sfDir> [rounds]):
-      // times sum(size(split(text,' '))) vs sum(graft_wordcount(text))
-      // over the documents scan, ALTERNATING in one JVM so scheduler
-      // drift hits both forms equally. Median per form printed.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val rounds = args.lift(2).map(_.toInt).getOrElse(5)
-      val docs = Tables(spark, d, "documents")
-      def time(c: org.apache.spark.sql.Column): Double = {
-        val t0 = System.nanoTime()
-        docs.select(c.as("n")).agg(sum(col("n"))).collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val split = scala.collection.mutable.ArrayBuffer[Double]()
-      val native = scala.collection.mutable.ArrayBuffer[Double]()
-      // warm both codegen paths once, untimed
-      time(size(org.apache.spark.sql.functions.split(col("text"), " ")))
-      time(graft.functions.TextFunctions.wordCount(col("text")))
-      (1 to rounds).foreach { _ =>
-        split += time(size(org.apache.spark.sql.functions.split(col("text"), " ")))
-        native += time(graft.functions.TextFunctions.wordCount(col("text")))
-      }
-      def med(xs: Seq[Double]) = xs.sorted.apply((xs.size - 1) / 2)
-      println(f"wcprobe rounds=$rounds split_med=${med(split.toSeq)}%.3f native_med=${med(native.toSeq)}%.3f " +
-        s"split=${split.map(x => f"$x%.3f").mkString(",")} native=${native.map(x => f"$x%.3f").mkString(",")}")
-    } else if (args(0) == "--ss24fixed") {
-      // Fixed-batch ss24 blowup row — [[--ss22fixed]]'s decomposition
-      // for the RESIDUAL index (args: --ss24fixed <sfDir> <mult>):
-      // build (coarse centroids + 2-round residual Lloyd + corpus
-      // encode) timed apart from a CONSTANT-membership probe, so the
-      // serving claim (probe ∝ batch × nprobe × cell size; training
-      // and encode are build-once) is measured, not argued.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val mult = args.lift(2).map(_.toLong).getOrElse(1L)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      val t0 = System.nanoTime()
-      val idx = operators.Similarity.ivfpqResidualIndex(e)
-      val coded = idx.coded.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      coded.write.format("noop").mode("overwrite").save()
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      val qs = e.filter(col("vec_id") % lit(50L * mult) === lit(7L * mult))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val nq = qs.count()
-      val t1 = System.nanoTime()
-      operators.Similarity.ivfpqResidualProbe(coded, idx.cents, idx.rcb, qs,
-          nprobe = 2, shortlist = 10, k = 3, excludeSelf = true)
-        .write.format("noop").mode("overwrite").save()
-      val tProbe = (System.nanoTime() - t1) / 1e9
-      println(f"ss24fixed mult=$mult batch=$nq build=$tBuild%.2f s probe=$tProbe%.2f s")
-    } else if (args(0) == "--transprobe") {
-      // Bounded-state probe for the mapGroupsWithState streams (args:
-      // --transprobe <sfDir> [chunks=8] [ttlSeconds]): unlike the
-      // state-TOPIC streams (--stateprobe), transitionDeltasStream
-      // holds REAL in-memory state-store rows (per-user pruned
-      // timelines), so the measurement reads Spark's own
-      // StreamingQueryProgress stateOperators gauges — state rows +
-      // bytes after draining the corpus chronologically — plus drain
-      // throughput. The bounded-state claim (idle users settle at ONE
-      // retained point under the watermark prune) becomes a measured
-      // number: rows ≈ user domain, NOT event count.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      implicit val sql = spark.sqlContext
-      val d = args(1)
-      val chunks = args.lift(2).map(_.toInt).getOrElse(8)
-      val ttl = args.lift(3).map(_.toLong)
-      val evs = Tables.eventsDs(spark, d).orderBy(col("ts")).collect()
-      val input = MemoryStream[graft.streaming.TopicEvent]
-      val q = graft.streaming.TopicStream
-        .transitionDeltasStream(input.toDS(), watermarkDelay = "1 hour",
-          ttlSeconds = ttl)
-        .writeStream.format("noop").outputMode("append").start()
-      val t0 = System.nanoTime()
-      evs.grouped((evs.length + chunks - 1) / chunks).foreach { b =>
-        input.addData(b.toIndexedSeq); q.processAllAvailable()
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val prog = q.lastProgress
-      val st = prog.stateOperators.headOption
-      q.stop()
-      val users = evs.map(_.user_id).distinct.length
-      println(f"transprobe events=${evs.length} users=$users chunks=$chunks " +
-        f"ttl=${ttl.getOrElse(-1L)} drain=$secs%.2f s rate=${evs.length / secs}%.0f ev/s " +
-        s"stateRows=${st.map(_.numRowsTotal).getOrElse(-1L)} " +
-        s"stateMB=${st.map(_.memoryUsedBytes / (1024.0 * 1024.0)).getOrElse(-1.0)}")
-    } else if (args(0) == "--ss12fixed") {
-      // Fixed-batch ss12 blowup row — the --ss22fixed decomposition
-      // for the INCREMENTAL index (args: --ss12fixed <sfDir> <mult>):
-      // index build (coarse centroids + sub-quantizer training +
-      // index-side refinement assignment) timed apart from a
-      // CONSTANT-membership probe (--scalegen re-keys ids old*mult+rep,
-      // so vec_id % (5*mult) == 0 is exactly the rep-0 replicas of the
-      // 1x fresh slice), evidencing the claim: build is pay-once and
-      // index-proportional, the arrival cost scales with the batch.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val mult = args.lift(2).map(_.toLong).getOrElse(1L)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      val t0 = System.nanoTime()
-      val idx = operators.Similarity.incAnnIndex(e.filter(col("vec_id") % 5 =!= 0))
-      val oldCells = idx.oldCells.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      oldCells.write.format("noop").mode("overwrite").save()
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      val fresh = e.filter(col("vec_id") % lit(5L * mult) === 0)
-      val nq = fresh.count()
-      val t1 = System.nanoTime()
-      operators.Similarity.incAnnProbe(idx.copy(oldCells = oldCells), fresh)
-        .write.format("noop").mode("overwrite").save()
-      val tProbe = (System.nanoTime() - t1) / 1e9
-      println(f"ss12fixed mult=$mult batch=$nq build=$tBuild%.2f s probe=$tProbe%.2f s")
-    } else if (args(0) == "--kmeans") {
-      // Time the full kmeansTrain loop (args: --kmeans <sfDir>
-      // [k] [maxIter]) — the multi-iteration verb has no queries()
-      // entry, so the blowup harness drives it here.
-      import graft.api._
-      val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
-      val k = args.lift(2).map(_.toInt).getOrElse(10)
-      val maxIter = args.lift(3).map(_.toInt).getOrElse(5)
-      val e = Tables(spark, d, "embeddings")
-      val t0 = System.nanoTime()
-      val m = e.kmeansTrain("vec_id", "embedding", k, maxIter, epsMilli = 0L)
-      val secs = (System.nanoTime() - t0) / 1e9
-      println(f"kmeansTrain k=$k iter=${m.shiftsMilli.size} " +
-        f"converged=${m.converged} shifts=${m.shiftsMilli.mkString(",")} t=$secs%.2f s")
-    } else if (args(0) == "--kpp") {
-      // Compare kmeans++ vs hash-partition seeding (args: --kpp
-      // <sfDir> [k] [iters...]): per budget, both final shifts and the
-      // assignment SSE of the trained centroids — the evidence behind
-      // ApiSpec's seeding pin.
-      import org.apache.spark.sql.functions._
-      import graft.api._
-      val d = args(1)
-      val k = args.lift(2).map(_.toInt).getOrElse(10)
-      val e = Tables.spread(Tables(spark, d, "embeddings"))
-      def sse(cen: org.apache.spark.sql.DataFrame): Double = {
-        val cents = cen.groupBy(col("cell"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-            st => st.getField("c")).as("cvec"))
-          .agg(array_sort(collect_list(struct(col("cell"), col("cvec")))).as("cents"))
-        e.crossJoin(broadcast(cents))
-          .select(array_min(transform(col("cents"),
-            cc => graft.functions.VectorFunctions.l2distSq(col("embedding"), cc.getField("cvec")))).as("d2"))
-          .agg(sum(col("d2"))).head.getDouble(0)
-      }
-      args.drop(3).map(_.toInt).foreach { iters =>
-        val pp = e.kmeansppSeed("vec_id", "embedding", k)
-        val mpp = e.kmeansTrain("vec_id", "embedding", k, maxIter = iters,
-          epsMilli = 0L, init = Some(pp))
-        val mh = e.kmeansTrain("vec_id", "embedding", k, maxIter = iters,
-          epsMilli = 0L)
-        println(s"iters=$iters pp   shifts=${mpp.shiftsMilli} sse=${sse(mpp.centroids)}")
-        println(s"iters=$iters hash shifts=${mh.shiftsMilli} sse=${sse(mh.centroids)}")
       }
     } else if (args(0) == "--scalegen") {
       // Decorrelated corpus blowup for scaling-exponent measurements
@@ -469,294 +157,21 @@ object DevProbe {
       // (ts21/ts22/ts24/ts26/ts27, funnelStream) need it replicated.
       blowEvents(spark, args(1), args(2), args(3).toInt)
       println(s"scalegen-events done: ${args(2)} x${args(3)}")
-    } else if (args(0) == "--funnelprobe") {
-      // funnelStream throughput probe (args: --funnelprobe <sfDir>
-      // [chunks=8]): drains the dir's stage-typed events through the
-      // stateful stream in `chunks` chronological micro-batches (the
-      // arrival order a topic delivers, so the watermark admits
-      // everything) and reports drained events/s plus the emitted
-      // resolution count. MemoryStream feed: the corpus is collected
-      // once on the driver — probe-only plumbing; the measured side
-      // (state shuffle + per-user resolution) is the distributed path.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.functions.col
-      import spark.implicits._
-      implicit val sql = spark.sqlContext
-      val d = args(1)
-      val chunks = args.lift(2).map(_.toInt).getOrElse(8)
-      val stages = Seq("signup", "view", "purchase")
-      val evs = Tables.eventsDs(spark, d)
-        .filter(col("event_type").isin(stages: _*))
-        .orderBy(col("ts")).collect()
-      val input = MemoryStream[graft.streaming.TopicEvent]
-      val q = graft.streaming.TopicStream
-        .funnelStream(input.toDS(), stages, tolSeconds = 43200L,
-          watermarkDelay = "1 hour")
-        .writeStream.format("noop").outputMode("update").start()
+    } else {
+      // Construction-INCLUSIVE, like Bench's timer: queries that run
+      // actions while their frame is built (the dd06/dd18 CC fixpoint
+      // counts, ss29's checkpointed greedy steps, tx27's training
+      // rounds) would otherwise do most of their work before the clock
+      // starts. noop WRITE, not count(): count() lets Catalyst prune
+      // payload columns and even eliminate whole join sides (a
+      // unique-keyed left join contributes nothing to the row count —
+      // tx18's span side vanished and the probe under-measured 60x).
+      // The noop sink materializes every output column, like Bench.
       val t0 = System.nanoTime()
-      evs.grouped((evs.length + chunks - 1) / chunks).foreach { b =>
-        input.addData(b.toIndexedSeq); q.processAllAvailable()
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      q.stop()
-      println(f"funnelprobe events=${evs.length} chunks=$chunks " +
-        f"t=$secs%.2f s rate=${evs.length / secs}%.0f ev/s")
-    } else if (args(0) == "--stateprobe") {
-      // Bounded-state probe for the keyed state-TOPIC streams (args:
-      // --stateprobe <retention|assoc|ltv> <sfDir> [chunks=8]) — the
-      // --funnelprobe discipline extended to the rest of the keyed
-      // family, so their bounded-state claims are measured, not
-      // argued: drains the dir's events chronologically through the
-      // stream's foreachBatch loop in `chunks` micro-batches, then
-      // reports (a) drain throughput, (b) each state topic's compacted
-      // row count, on-disk bytes, and the DOMAIN bound the design
-      // claims (retention: users x active-days; assoc: users x
-      // |event_type|; ltv: revenue events) — these streams keep NO
-      // in-memory resolution state, the topic IS the entire state —
-      // and (c) the read-side report time over the accumulated state.
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      implicit val sql = spark.sqlContext
-      val cls = args(1)
-      val d = args(2)
-      val chunks = args.lift(3).map(_.toInt).getOrElse(8)
-      val evs = Tables.eventsDs(spark, d).orderBy(col("ts")).collect()
-      val root = java.nio.file.Files.createTempDirectory("graft_stateprobe").toString
-      val store = new graft.sources.TopicStore(spark, root, bucketMinutes = 24 * 60)
-      val input = MemoryStream[graft.streaming.TopicEvent]
-      val writers = cls match {
-        case "retention" => Seq(
-          graft.streaming.TopicStream.retentionStream(input.toDF(), store, "acts"))
-        case "assoc" => Seq(
-          graft.streaming.TopicStream.assocStream(input.toDS(), store, "assoc"))
-        case "ltv" => Seq(
-          graft.streaming.TopicStream.retentionStream(input.toDF(), store, "acts"),
-          graft.streaming.TopicStream.ltvStream(input.toDF(), store, "rev"))
-        case other => sys.error(s"unknown stateprobe class $other")
-      }
-      val qs = writers.zipWithIndex.map { case (w, i) =>
-        w.option("checkpointLocation", s"$root/_chk$i").start()
-      }
-      val t0 = System.nanoTime()
-      evs.grouped((evs.length + chunks - 1) / chunks).foreach { b =>
-        input.addData(b.toIndexedSeq); qs.foreach(_.processAllAvailable())
-      }
-      val drainS = (System.nanoTime() - t0) / 1e9
-      qs.foreach(_.stop())
-      println(f"stateprobe class=$cls events=${evs.length} chunks=$chunks " +
-        f"drain=$drainS%.2f s rate=${evs.length / drainS}%.0f ev/s")
-      val users = evs.map(_.user_id).distinct.length.toLong
-      val bound = cls match {
-        case "retention" =>
-          val days = evs.map(e => e.ts.getTime / 86400000L).distinct.length
-          ("users x active-days", users * days)
-        case "assoc" =>
-          val types = evs.map(_.event_type).distinct.length
-          ("users x |event_type|", users * types)
-        case "ltv" =>
-          ("revenue events", evs.count(_.event_type == "purchase").toLong)
-      }
-      def du(p: java.io.File): Long =
-        if (p.isFile) p.length
-        else Option(p.listFiles).map(_.map(du).sum).getOrElse(0L)
-      val topics = cls match {
-        case "retention" => Seq("acts" -> "act_key")
-        case "assoc"     => Seq("assoc" -> "fact_key")
-        case "ltv"       => Seq("acts" -> "act_key", "rev" -> "rkey")
-      }
-      topics.foreach { case (t, k) =>
-        val rows = store.readMerged(t, k).count()
-        val mb = du(new java.io.File(s"$root/$t")) / (1024.0 * 1024.0)
-        println(f"  state topic=$t rows=$rows disk=$mb%.1f MB " +
-          f"(domain bound ${bound._1} = ${bound._2})")
-      }
-      val t1 = System.nanoTime()
-      val report = cls match {
-        case "retention" => graft.streaming.TopicStream.currentRetention(store, "acts")
-        case "assoc"     => graft.streaming.TopicStream.currentAssoc(store, "assoc")
-        case "ltv"       => graft.streaming.TopicStream.currentLtv(store, "acts", "rev")
-      }
-      report.write.format("noop").mode("overwrite").save()
-      println(f"  read-side report=${(System.nanoTime() - t1) / 1e9}%.2f s")
-    } else if (args(0) == "--fuzzyq") {
-      // Fuzzy-match blocker at an EXPLICIT gram width (args: --fuzzyq
-      // <dir> <q> [maxGramDf]) — the --knnk-style knob-isolation twin
-      // for the fuzzyGramWidthFor contract: drive dd17's exact plan
-      // (distinct part names → q-gram block join → Levenshtein verify)
-      // at any width over a --scalegen-part registry, to measure the
-      // 3-gram knee and the wider-gram fix separately from the rule
-      // that picks them. Reports time, candidate-pair volume (the
-      // blocker's output BEFORE the lev filter — the quantity that
-      // saturates), and matched pairs.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val q = args(2).toInt
-      val cap = args.lift(3).map(_.toLong).getOrElse(Long.MaxValue)
-      val names = spark.read.parquet(s"$d/part.parquet")
-        .select(col("p_name").as("name")).distinct()
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup.fuzzyPairs(
-        names, maxDist = 3, minSharedGrams = 2L, maxGramDf = cap, q = q)
-        .agg(count(lit(1)), sum(lit(1))).head()
-      val secs = (System.nanoTime() - t0) / 1e9
-      // candidate volume = the blocked pair count before the lev
-      // filter (re-derived with the same blocker, lev filter off via
-      // maxDist = Int.MaxValue — one extra run, probe-only)
-      val cand = graft.operators.Dedup.fuzzyPairs(
-        names, maxDist = Int.MaxValue, minSharedGrams = 2L,
-        maxGramDf = cap, q = q).count()
-      println(f"FUZZYQ q=$q names=${names.count()} matched=${pairs.getLong(0)} " +
-        f"candidates=$cand t=$secs%.2f s")
-    } else if (args(0) == "--overlapprobe") {
-      // sourceOverlap route evidence (args: --overlapprobe <dir>
-      // <exact|sketch>): time the two forms the api verb routes
-      // between, on the same corpus — the measured basis for
-      // sourceOverlapModeFor's 10^6 threshold.
-      val docDf = graft.Tables(spark, args(1), "documents")
-        .select(org.apache.spark.sql.functions.col("source"),
-          org.apache.spark.sql.functions.col("text"))
-      val t0 = System.nanoTime()
-      val df = if (args(2) == "exact") graft.operators.Dedup.sourceOverlap(docDf)
-               else graft.operators.Dedup.sourceOverlapSketch(docDf)
-      df.write.format("noop").mode("overwrite").save()
-      println(f"OVERLAP form=${args(2)} t=${(System.nanoTime() - t0) / 1e9}%.2f s")
-    } else if (args(0) == "--dd05probe") {
-      // dd05 blowup DECOMPOSITION (args: --dd05probe <dir>): the 64x
-      // curve reads 11.4x and the design claim is "that growth is
-      // candidate VOLUME (output-linear by construction — the adaptive
-      // band width pins bucket occupancy at ~64, so candidates per row
-      // stay constant) — not a per-candidate cost knee". This probe
-      // measures the two terms separately at one scale: (a) the
-      // banding + block join alone (candidate count — the volume
-      // term), (b) the full query (verify included), and reports
-      // candidates-per-row and per-candidate verify time so the
-      // 1x/4x/16x/64x table can show both flat while total time grows
-      // with output size.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val t0 = System.nanoTime()
-      val e = graft.Tables.spread(graft.Tables(spark, d, "embeddings"))
-      val n = graft.sources.Stats.parquetRowCount(spark, s"$d/embeddings.parquet")
-        .getOrElse(e.count())
-      val bits = math.min(24, math.max(8,
-        math.ceil(math.log(math.max(1L, n / 64).toDouble) / math.log(2.0)).toInt))
-      val cand = graft.operators.Dedup.dd05Candidates(e, bits)
-      val c = cand.count()
-      val tCand = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      graft.SparkEntry.queries("dd05_embed_neardup")(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      val tFull = (System.nanoTime() - t1) / 1e9
-      println(f"DD05 n=$n bits=$bits candidates=$c candPerRow=${c.toDouble / n}%.2f " +
-        f"tCand=$tCand%.2f s tFull=$tFull%.2f s perCandUs=${tFull * 1e6 / c}%.2f")
-    } else if (args(0) == "--knnk") {
-      // knn-graph core with an EXPLICIT cell count (args: --knnk <dir>
-      // <cells>). The registered ss28 now derives cells ∝ corpus
-      // in-plan (hashCells: n/64 cells, constant cell size — the r10
-      // verdict's fix for the 64²-pair growth its fixed-label form
-      // measured), so this probe is the knob-isolation twin: drive
-      // the same knnGraphByCell core at an arbitrary cell count to
-      // measure the pair-join term alone (e.g. hold cells at the 1x
-      // value under a blowup to reproduce the quadratic artifact, or
-      // scale them to confirm linearity).
-      import org.apache.spark.sql.functions._
-      import graft.api._
-      val e = graft.Tables.spread(graft.Tables(spark, args(1), "embeddings"))
-        .withColumn("kcell", pmod(xxhash64(col("vec_id")), lit(args(2).toLong)).cast("int"))
-      val t0 = System.nanoTime()
-      e.knnGraphByCell("vec_id", "embedding", "kcell")
-        .write.format("noop").mode("overwrite").save()
-      println("KNNK=done in " + (System.nanoTime() - t0) / 1e9 + "s")
-    } else if (args(0) == "--pqprobe") {
-      // Isolate ONE pqIterate pass over raw embeddings (args:
-      // --pqprobe <dir> [reps]): seed once, then time reps assign+
-      // recompute rounds — the ss14 training kernel alone.
-      val d = args(1)
-      val reps = args.lift(2).map(_.toInt).getOrElse(3)
-      val e = graft.Tables(spark, d, "embeddings")
-      val seed = graft.operators.Similarity.pqSeed(e)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      seed.write.format("noop").mode("overwrite").save()
-      (1 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        graft.operators.Similarity.pqIterate(e, seed)
-          .write.format("noop").mode("overwrite").save()
-        println(f"PQITER rep$i=${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-    } else if (args(0) == "--argminprobe") {
-      // Cell-argmin expression A/B (args: --argminprobe <sfDir> [rounds]):
-      // times the composed array_min(transform(cents, struct(l2, label)))
-      // vs graft_cell_argmin over the embeddings x broadcast(centroidArray)
-      // cross join, ALTERNATING in one JVM. Median per form printed.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val rounds = args.lift(2).map(_.toInt).getOrElse(5)
-      val e = Tables(spark, d, "embeddings")
-      val cents = graft.operators.Similarity.centroidArrayPublic(e)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cents.count()
-      val base = e.crossJoin(broadcast(cents))
-      import graft.functions.VectorFunctions.{l2distSq, cellArgmin}
-      val composedCol = array_min(transform(col("cents"),
-        c => struct(l2distSq(col("embedding"), c.getField("cvec")).as("dist2"),
-                    c.getField("c_label").as("cell"))))
-      val fusedCol = cellArgmin(col("embedding"), col("cents"), "cvec", "c_label")
-      def time(c: org.apache.spark.sql.Column): Double = {
-        val t0 = System.nanoTime()
-        base.select(col("vec_id"), c.getField("cell").as("cell"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      time(composedCol); time(fusedCol) // warm untimed
-      val comp = scala.collection.mutable.ArrayBuffer[Double]()
-      val fus = scala.collection.mutable.ArrayBuffer[Double]()
-      (1 to rounds).foreach { _ =>
-        comp += time(composedCol)
-        fus += time(fusedCol)
-      }
-      def med(xs: Seq[Double]) = xs.sorted.apply((xs.size - 1) / 2)
-      println(f"argminprobe rounds=$rounds composed_med=${med(comp.toSeq)}%.3f fused_med=${med(fus.toSeq)}%.3f")
-    } else if (args(0) == "--ss24probe") {
-      // ss24 phase decomposition (args: --ss24probe <dir>): which of
-      // the residual-index phases owns the pin — (a) coarse centroids
-      // + residual materialize, (b) the 2-iteration residual PQ
-      // training chain (resSeed + 2x pqIterate), (c) encode + batch
-      // probe. Phases are timed cumulatively via count/noop actions on
-      // the same frames the query builds.
-      import org.apache.spark.sql.functions._
-      val d = args(1)
-      val e = graft.Tables(spark, d, "embeddings")
-      val t0 = System.nanoTime()
-      val idx = graft.operators.Similarity.ivfpqResidualIndexProbe(e)
-      println(f"SS24 phases: cents+res=${idx._1}%.2fs train=${idx._2}%.2fs encode+probe follows")
-      val t1 = System.nanoTime()
-      graft.SparkEntry.queries("ss24_ivfpq_residual")(spark, d)
-        .write.format("noop").mode("overwrite").save()
-      println(f"SS24 full=${(System.nanoTime() - t1) / 1e9}%.2fs (probe overhead before: ${(t1 - t0) / 1e9}%.2fs)")
-    } else if (args(0) == "--full") {
-      // Construction-INCLUSIVE timing (args: --full <query> <dir>):
-      // queries whose kernels run actions during plan construction
-      // (the dd06/dd18 CC fixpoint counts, ss29's checkpointed greedy
-      // steps, tx27's training rounds) execute most of their cost
-      // before the generic branch below starts its timer — this mode
-      // times construction + the noop write, matching what Bench's
-      // timer sees.
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(args(1))(spark, args(2))
+      val df = SparkEntry.queries(args(0))(spark, args(1))
       df.write.format("noop").mode("overwrite").save()
       println("FULL=done in " + (System.nanoTime() - t0) / 1e9 + "s")
-    } else {
-      val df = SparkEntry.queries(args(0))(spark, args(1))
       if (args.length > 2) df.explain("formatted")
-      // noop WRITE, not count(): count() lets Catalyst prune payload
-      // columns and even eliminate whole join sides (a unique-keyed
-      // left join contributes nothing to the row count — tx18's span
-      // side vanished and the probe under-measured 60x). The noop sink
-      // materializes every output column, like Bench.
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      println("COUNT=done in " + (System.nanoTime()-t0)/1e9 + "s")
     }
   }
 }

@@ -19,4 +19,19 @@ object SparkEntry {
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =
     Relational.oracle ++ TimeSeries.oracle ++ TextOps.oracle ++ VectorOps.oracle ++ Similarity.oracle ++ Dedup.oracle ++ Multimodal.oracle ++ Pipeline.oracle ++ Curation.oracle
+
+  /** The session Bench, Verify and DevProbe run the registry in:
+    * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UTC session time, no UI, WARN logging. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -142,25 +142,16 @@ object Tracing {
     b.map("%02x".format(_)).mkString
   }
 
-  /** JSON string escape (same contract as Verify's dump: backslash,
-    * quote, all control chars). */
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => "\\u%04x".format(c.toInt)
-    case c => c.toString
-  }
-
   /** OTLP/HTTP JSON: one resourceSpans / one scopeSpans envelope per
     * POST; span ids are fresh randoms (each action is its own trace —
     * Spark actions have no ambient parent context to propagate). */
   private def render(spans: Seq[Span]): String = {
     val items = spans.map { s =>
       val attrs = s.attrs.map {
-        case (k, Left(v))  => s"""{"key":"${esc(k)}","value":{"stringValue":"${esc(v)}"}}"""
-        case (k, Right(v)) => s"""{"key":"${esc(k)}","value":{"intValue":"$v"}}"""
+        case (k, Left(v))  => s"""{"key":"${Json.escape(k)}","value":{"stringValue":"${Json.escape(v)}"}}"""
+        case (k, Right(v)) => s"""{"key":"${Json.escape(k)}","value":{"intValue":"$v"}}"""
       }.mkString(",")
-      s"""{"traceId":"${hex(16)}","spanId":"${hex(8)}","name":"${esc(s.name)}","kind":1,""" +
+      s"""{"traceId":"${hex(16)}","spanId":"${hex(8)}","name":"${Json.escape(s.name)}","kind":1,""" +
         s""""startTimeUnixNano":"${s.startNanos}","endTimeUnixNano":"${s.endNanos}",""" +
         s""""attributes":[$attrs],"status":{"code":${if (s.ok) 1 else 2}}}"""
     }.mkString(",")

@@ -575,6 +575,9 @@ object Dedup {
       // kernel — the verify's set ops only ever COUNT (intersect/size),
       // so 8-byte longs replace ~30-byte gram strings in the arrays
       // that ride two doc-keyed joins (the WordGramHashesExpr trade).
+      // The "exact" Jaccard is therefore exact over the 64-bit keys:
+      // two distinct shingles that collide count as one (P ~ n²/2^65
+      // per document pair's shingle union).
       val sets = Tables.spread(docs(s, d))
         .select(col("doc_id"), array_distinct(gramXxh(col("text"), 3)).as("sh"))
       sets.select(col("doc_id").as("a"), col("sh").as("sh_a"))
@@ -598,7 +601,7 @@ object Dedup {
       containmentPairs(docs(s, d), 500L).orderBy(col("a"), col("b"))),
 
     // Sketch-accuracy AUDIT: MinHash-estimated Jaccard (signature
-    // agreement / 8) vs the exact shingle Jaccard, per candidate pair
+    // agreement / 8) vs the shingle Jaccard, per candidate pair
     // — the calibration report that justifies trusting dd02's
     // estimates at 100 TB where the exact verify is only run on
     // candidates. Integer milli math end-to-end; same bucket-bounded
@@ -610,6 +613,9 @@ object Dedup {
       // kernel — the verify's set ops only ever COUNT (intersect/size),
       // so 8-byte longs replace ~30-byte gram strings in the arrays
       // that ride two doc-keyed joins (the WordGramHashesExpr trade).
+      // The "exact" Jaccard is therefore exact over the 64-bit keys:
+      // two distinct shingles that collide count as one (P ~ n²/2^65
+      // per document pair's shingle union).
       val sets = Tables.spread(docs(s, d))
         .select(col("doc_id"), array_distinct(gramXxh(col("text"), 3)).as("sh"))
       sets.select(col("doc_id").as("a"), col("sh").as("sh_a"))
@@ -670,7 +676,7 @@ object Dedup {
     // (shares from effective TOKENS, not milli-tokens — keeps the
     // arithmetic inside the long domain at 10^14 raw tokens). Scale
     // shape: dd18's pair-graph fixpoint (the dominant cost, measured
-    // 1.7x at --full 64x) + one doc-keyed co-shuffled join + an
+    // 1.7x at 64x, construction-inclusive) + one doc-keyed co-shuffled join + an
     // |S|-row rollup with a 1-row broadcast.
     "sp14_effective_tokens" -> ((s, d) => {
       val w = softWeights(docs(s, d)).select(col("doc_id"), col("weight_milli"))
@@ -914,9 +920,7 @@ object Dedup {
     })
   )
 
-  /** dd05's CANDIDATE stage as a shared kernel (the query and the
-    * `--dd05probe` decomposition read the same plan, the ivfpqEncode
-    * sharing discipline): 4 hyperplane-signature bands of `bits` bits
+  /** dd05's CANDIDATE stage: 4 hyperplane-signature bands of `bits` bits
     * each, banded equi-join, distinct (a < b) pairs. The caller picks
     * `bits` from the corpus size (occupancy pins at ~64, so
     * candidates per row are constant by construction — the volume
@@ -1125,9 +1129,12 @@ object Dedup {
   private def gatedSketchOverlap(docDf: DataFrame, theta: Boolean): DataFrame = {
     // r13: the shingle stage is the fused text-slice kernel — 16-byte
     // binary digests (a bijection of the md5 hex strings, so every
-    // count below is value-identical) with no words array, no
+    // exact count below is value-identical) with no words array, no
     // interpreted shingle transform, no per-window gram/hex string;
     // the distinct and the two group-bys carry half the key bytes.
+    // The theta/HLL ESTIMATES hash the binary, not the hex, so above a
+    // sketch's lgK=14 exact region they can differ from the hex-input
+    // estimates (same error bound, different sample).
     val e = Tables.spread(docDf)
       .select(col("source"), explode(gramMd5(col("text"), 3)).as("h"))
       .distinct()

@@ -104,8 +104,8 @@ object Similarity {
     // query read 201 s at the 64x blowup because 10 label cells put
     // 64x members in each and the probe join grew 64²): the index
     // now refines each cell into n_old/640 SUB-quantizer regions
-    // (see [[incAnnIndex]]/[[incAnnProbe]] — build vs probe split so
-    // DevProbe --ss12fixed can time them apart). Inert below 640
+    // (see [[incAnnIndex]]/[[incAnnProbe]] — build vs probe split, so
+    // the pay-once build and the per-arrival probe read apart). Inert below 640
     // index vectors, so correctness-scale output is unchanged.
     "ss12_incremental_ann" -> ((s, d) => {
       val e = emb(s, d)
@@ -1266,8 +1266,8 @@ object Similarity {
     * assignment is a lazy localCheckpoint (two readers, blocks
     * release on GC). */
   /** ss36's audit kernel over an embedding frame and a (q_id, q_emb)
-    * query batch — shared with DevProbe's `--mrlfixed` fixed-batch
-    * probe so the two can never measure different pipelines: ONE
+    * query batch — shared by the registered query and the
+    * `mrlCurve` api verb so the two can never run different pipelines: ONE
     * persisted Q×N audit frame carrying the exact cosine plus the
     * 8/16/32-dim prefix cosines, four per-query rank windows, and the
     * per-query hit counts of a fixed-40 prefix shortlist against the
@@ -1441,7 +1441,6 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("qd"), col("p95_qd"),
         (col("qd") > col("p95_qd")).as("is_ood"))
 
-  private[graft] def centroidArrayPublic(e: DataFrame): DataFrame = centroidArray(e)
   private def centroidArray(e: DataFrame): DataFrame = {
     // r11: dense-buffer centroids via the typed VectorSumAgg (ss04's
     // aggregator) — ONE map-side-combined buffer per (label x
@@ -1941,31 +1940,6 @@ object Similarity {
     * bench's clearCache handle it. */
   private[graft] final case class ResidualIndex(cents: DataFrame, rcb: DataFrame,
                                                 coded: DataFrame, release: () => Unit)
-
-  /** Dev-probe twin of [[ivfpqResidualIndex]]: forces each training
-    * phase with an action and returns (cents+res seconds, rcb train
-    * seconds). Measurement only — never on a query path. */
-  private[graft] def ivfpqResidualIndexProbe(e: DataFrame): (Double, Double) = {
-    val t0 = System.nanoTime()
-    val cents = centroidArray(e)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val res = e.crossJoin(broadcast(cents))
-      .withColumn("best", array_min(cellFullStructsOf(col("embedding"))))
-      .select(col("vec_id"), col("embedding"), col("best.cell").as("cell"),
-        residual(col("embedding"), col("best.cvec")).as("res"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    res.write.format("noop").mode("overwrite").save()
-    val tRes = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val resAsEmb = res.select(col("vec_id"), col("res").as("embedding"))
-    val rcb = pqIterateDense(resAsEmb,
-        pqIterateDense(resAsEmb, resSeed(resAsEmb), ResGrain), ResGrain)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rcb.write.format("noop").mode("overwrite").save()
-    val tTrain = (System.nanoTime() - t1) / 1e9
-    cents.unpersist(); res.unpersist(); rcb.unpersist()
-    (tRes, tTrain)
-  }
 
   private[graft] def ivfpqResidualIndex(e: DataFrame): ResidualIndex = {
     val cents = centroidArray(e)

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -34,12 +32,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * enclosing operator keeps its whole-stage span.
   */
 case class BigramCountsExpr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"bigram_counts expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -84,11 +80,6 @@ case class BigramCountsExpr(child: Expression)
       j += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bigramCounts", this, classOf[BigramCountsExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): BigramCountsExpr =

@@ -1,9 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * one call into [[kernel]] per row (reference-object pattern).
   */
 case class CdcChunksExpr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   private val W = 8
   private val B = 31L
@@ -48,10 +46,8 @@ case class CdcChunksExpr(child: Expression)
     r
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_cdc_chunks expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -67,7 +63,7 @@ case class CdcChunksExpr(child: Expression)
     val bytes = in.getBytes
     val nb = bytes.length
     if (nb == 0) return new GenericArrayData(Array.empty[Any])
-    val md = WordGramMd5Expr.sharedDigest
+    val md = Md5.get
     // window ring buffer of the last W code points
     val ring = new Array[Long](W)
     val out = new scala.collection.mutable.ArrayBuffer[Any](nb / 16 + 4)
@@ -114,11 +110,6 @@ case class CdcChunksExpr(child: Expression)
       out += InternalRow(md.digest(), (cpIdx - chunkStartCp).toLong)
     }
     new GenericArrayData(out.toArray)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cdcChunks", this, classOf[CdcChunksExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CdcChunksExpr =

@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * enclosing operator keeps its whole-stage span.
   */
 case class CdcCutsExpr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   private val W = 8
   private val B = 31L
@@ -44,10 +41,9 @@ case class CdcCutsExpr(child: Expression)
     r
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"cdc_cuts expects string, got $t")
-  }
+  override protected def checkName = "cdc_cuts"
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -74,11 +70,6 @@ case class CdcCutsExpr(child: Expression)
       i += 1
     }
     new GenericArrayData(cuts.toArray)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cdcCuts", this, classOf[CdcCutsExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): CdcCutsExpr =

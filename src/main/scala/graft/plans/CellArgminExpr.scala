@@ -1,10 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -45,7 +42,7 @@ import org.apache.spark.unsafe.types.UTF8String
 case class CellArgminExpr(left: Expression, right: Expression,
                           vecField: String, labelField: String,
                           distName: String, labelName: String)
-    extends BinaryExpression {
+    extends BinaryExpression with RefKernel {
 
   private def embFloat: Boolean = left.dataType match {
     case ArrayType(FloatType, _) => true
@@ -64,20 +61,20 @@ case class CellArgminExpr(left: Expression, right: Expression,
     case _ => false
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _), ArrayType(st: StructType, _))
-        if st.fieldNames.contains(vecField) && st.fieldNames.contains(labelField) &&
-          (st.fields(st.fieldIndex(vecField)).dataType match {
-            case ArrayType(FloatType | DoubleType, _) => true
-            case _ => false
-          }) &&
-          (st.fields(st.fieldIndex(labelField)).dataType match {
-            case IntegerType | LongType | StringType => true
-            case _ => false
-          }) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_cell_argmin expects (array<float|double>, array<struct<$vecField: array<float|double>, $labelField: int|long|string>>), got $l / $r")
+  override protected def expects =
+    s"(array<float|double>, array<struct<$vecField: array<float|double>, $labelField: int|long|string>>)"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(FloatType | DoubleType, _), ArrayType(st: StructType, _)) =>
+      st.fieldNames.contains(vecField) && st.fieldNames.contains(labelField) &&
+        (st.fields(st.fieldIndex(vecField)).dataType match {
+          case ArrayType(FloatType | DoubleType, _) => true
+          case _ => false
+        }) &&
+        (st.fields(st.fieldIndex(labelField)).dataType match {
+          case IntegerType | LongType | StringType => true
+          case _ => false
+        })
+    case _ => false
   }
 
   override def dataType: DataType = StructType(Seq(
@@ -87,20 +84,17 @@ case class CellArgminExpr(left: Expression, right: Expression,
 
   // null emb still yields a (null, label) struct — the expression is
   // null only when the CENTROID ARRAY itself is null or empty, which
-  // is what eval below implements; BinaryExpression's default eval
-  // would null-propagate the left side too, so eval is overridden.
+  // is what kernel implements; BinaryExpression's default eval would
+  // null-propagate the left side too, so eval is overridden.
   override def nullable: Boolean = true
 
-  override def eval(input: InternalRow): Any = {
-    val c = right.eval(input)
-    if (c == null) return null
-    kernel(left.eval(input), c.asInstanceOf[ArrayData])
-  }
+  override def eval(input: InternalRow): Any =
+    kernel(left.eval(input), right.eval(input).asInstanceOf[ArrayData])
 
   /** `emb` may be null (composed form keeps the row). */
   def kernel(embAny: Any, cents: ArrayData): InternalRow = {
+    if (cents == null || cents.numElements() == 0) return null
     val k = cents.numElements()
-    if (k == 0) return null
     val emb = if (embAny == null) null else embAny.asInstanceOf[ArrayData]
     val ef = embFloat
     val vf = vecFloat
@@ -160,21 +154,6 @@ case class CellArgminExpr(left: Expression, right: Expression,
     }
     new GenericInternalRow(Array[Any](
       if (bestD == null) null else bestD.doubleValue, bestLab))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("cellArgmin", this, classOf[CellArgminExpr].getName)
-    val c = right.genCode(ctx)
-    val e = left.genCode(ctx)
-    ev.copy(code = c.code + e.code +
-      code"""
-        boolean ${ev.isNull} = ${c.isNull};
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = $ref.kernel(${e.isNull} ? null : ${e.value}, ${c.value});
-          ${ev.isNull} = (${ev.value} == null);
-        }
-        """)
   }
 
   override protected def withNewChildrenInternal(

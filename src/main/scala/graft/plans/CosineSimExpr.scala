@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -23,16 +22,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * list_sum folds, SURVEY.md §5).
   */
 case class CosineSimExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelTypeCheck {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cosine expects two array<float> args, got ${left.dataType} / ${right.dataType}")
+  override protected def expects = "two array<float> args"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(FloatType, _), ArrayType(FloatType, _)) => true
+    case _ => false
   }
 
   override def dataType: DataType = DoubleType

@@ -1,12 +1,7 @@
 package graft.plans
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, StringType}
@@ -34,20 +29,6 @@ import org.apache.spark.unsafe.Platform
   * produces, so both kernels map null to the empty-text result.
   */
 private[plans] object GramSlices {
-  /** Shared doGenCode for the null-tolerant gram kernels (null doc ==
-    * empty doc, `nullable=false`): evaluate the child, hand the value
-    * (or null) to the expression's own `kernel`, never-null result.
-    * The reference-object call keeps the enclosing operator inside
-    * whole-stage codegen -- `CodegenFallback` would evict it. */
-  def refCallGenCode(ctx: CodegenContext, ev: ExprCode, child: Expression,
-                     expr: AnyRef, className: String): ExprCode = {
-    val c = child.genCode(ctx)
-    val ref = ctx.addReferenceObj("gramKernel", expr, className)
-    val call = s"final org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = " +
-      s"$ref.kernel(${c.isNull} ? null : ${c.value});"
-    ev.copy(code = c.code + code"$call", isNull = FalseLiteral)
-  }
-
   /** Word start offsets within `bytes` (0x20-separated, empties kept). */
   def wordStarts(bytes: Array[Byte]): Array[Int] = {
     var nWords = 1
@@ -78,14 +59,12 @@ private[plans] object GramSlices {
   * pattern) so the enclosing operator keeps its whole-stage span.
   */
 case class WordGramMd5Expr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(k >= 1, s"gram width must be >= 1, got $k")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_gram_md5 expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
   override def nullable: Boolean = false
@@ -98,7 +77,7 @@ case class WordGramMd5Expr(child: Expression, k: Int)
     val bytes =
       if (v == null) Array.emptyByteArray
       else v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-    val md = WordGramMd5Expr.digest.get()
+    val md = Md5.get
     val starts = GramSlices.wordStarts(bytes)
     val nWords = starts.length - 1
     if (nWords < k) {
@@ -118,20 +97,10 @@ case class WordGramMd5Expr(child: Expression, k: Int)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    GramSlices.refCallGenCode(ctx, ev, child, this, classOf[WordGramMd5Expr].getName)
-
   override protected def withNewChildInternal(newChild: Expression): WordGramMd5Expr =
     copy(child = newChild)
 
   override def prettyName: String = "graft_gram_md5"
-}
-
-object WordGramMd5Expr {
-  private val digest = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-  private[plans] def sharedDigest: MessageDigest = digest.get()
 }
 
 /** xxhash64 (seed 42) of every TILED `width`-word line of a document,
@@ -149,14 +118,12 @@ object WordGramMd5Expr {
   * line, exactly as size([""]) = 1 does.
   */
 case class TiledLineHashesExpr(child: Expression, width: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(width >= 1, s"line width must be >= 1, got $width")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_line_hashes expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
@@ -182,9 +149,6 @@ case class TiledLineHashesExpr(child: Expression, width: Int)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    GramSlices.refCallGenCode(ctx, ev, child, this, classOf[TiledLineHashesExpr].getName)
-
   override protected def withNewChildInternal(newChild: Expression): TiledLineHashesExpr =
     copy(child = newChild)
 
@@ -207,15 +171,13 @@ case class TiledLineHashesExpr(child: Expression, width: Int)
   * [[GramSlices]]).
   */
 case class WinnowTextExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(k >= 1, s"gram width must be >= 1, got $k")
   require(w >= 1, s"winnow window must be >= 1, got $w")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_winnow_text expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
   override def nullable: Boolean = false
@@ -227,7 +189,7 @@ case class WinnowTextExpr(child: Expression, k: Int, w: Int)
     val bytes =
       if (v == null) Array.emptyByteArray
       else v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-    val md = WordGramMd5Expr.sharedDigest
+    val md = Md5.get
     val starts = GramSlices.wordStarts(bytes)
     val nWords = starts.length - 1
     val dg: Array[Array[Byte]] =
@@ -285,9 +247,6 @@ case class WinnowTextExpr(child: Expression, k: Int, w: Int)
     new GenericArrayData(sel.toArray[Any])
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    GramSlices.refCallGenCode(ctx, ev, child, this, classOf[WinnowTextExpr].getName)
-
   override protected def withNewChildInternal(newChild: Expression): WinnowTextExpr =
     copy(child = newChild)
 
@@ -306,14 +265,12 @@ case class WinnowTextExpr(child: Expression, k: Int, w: Int)
   * oracle pins agreement at the checked SFs).
   */
 case class WordGramXxhTextExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(k >= 1, s"gram width must be >= 1, got $k")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_gram_xxh expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
@@ -340,9 +297,6 @@ case class WordGramXxhTextExpr(child: Expression, k: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    GramSlices.refCallGenCode(ctx, ev, child, this, classOf[WordGramXxhTextExpr].getName)
 
   override protected def withNewChildInternal(newChild: Expression): WordGramXxhTextExpr =
     copy(child = newChild)

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -28,18 +27,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * pass doubles on both sides.
   */
 case class L2DistSqExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelTypeCheck {
 
-  private def elemOk(t: DataType) = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+  override protected def expects = "array<float|double> args"
+  override protected def accepts(ts: Seq[DataType]) = ts.forall {
+    case ArrayType(FloatType | DoubleType, _) => true
     case _ => false
   }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && elemOk(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_l2distsq expects array<float|double> args, got ${left.dataType} / ${right.dataType}")
 
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -49,7 +47,7 @@ private[plans] object TokenScan {
   * whole operator from codegen, not just this expression.
   */
 case class LexiconCountsExpr(child: Expression, lexicons: Seq[Seq[String]])
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(lexicons.nonEmpty && lexicons.forall(_.nonEmpty),
     "graft_lexicon_counts needs at least one non-empty lexicon")
@@ -57,10 +55,8 @@ case class LexiconCountsExpr(child: Expression, lexicons: Seq[Seq[String]])
   private lazy val lexBytes: Array[Array[Array[Byte]]] =
     lexicons.map(_.map(_.getBytes("UTF-8")).toArray).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_lexicon_counts expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -88,11 +84,6 @@ case class LexiconCountsExpr(child: Expression, lexicons: Seq[Seq[String]])
       }
     }
     new GenericArrayData(counts)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lexCounts", this, classOf[LexiconCountsExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): LexiconCountsExpr =
@@ -223,15 +214,13 @@ private[plans] final class SliceCounter(bytes: Array[Byte]) {
   * instead of evaluating the kernel a second time below the exchange.
   */
 case class TokenProfileExpr(child: Expression, lexicon: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   private lazy val lexBytes: Array[Array[Byte]] =
     lexicon.map(_.getBytes("UTF-8")).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_token_profile expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_words", IntegerType, nullable = false),
@@ -275,11 +264,6 @@ case class TokenProfileExpr(child: Expression, lexicon: Seq[String])
     InternalRow(nWords, nStop, toks.nUniq, tC,
       UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, tS, tS + tL)),
       nBg, bgs.nUniq, nHapax, sumSq)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("tokProfile", this, classOf[TokenProfileExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): TokenProfileExpr =

@@ -1,9 +1,6 @@
 package graft.plans
 
-import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,11 +24,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Codegen emits one call into [[kernel]] per row (reference-object
   * pattern) so the enclosing operator keeps its whole-stage span.
   */
-case class MinHashSigExpr(child: Expression) extends UnaryExpression {
+case class MinHashSigExpr(child: Expression) extends UnaryExpression with RefKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"minhash_sig expects array<string>, got $t")
+  override protected def checkName = "minhash_sig"
+  override protected def expects = "array<string>"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(StringType, _)) => true
+    case _ => false
   }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -43,7 +42,7 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
   def kernel(shingles: ArrayData): ArrayData = {
     val n = shingles.numElements()
     val mins = Array.fill(8)(0xFFFFFFFFL)
-    val md = MinHashSigExpr.digest.get()
+    val md = Md5.get
     var i = 0
     while (i < n) {
       val bytes = shingles.getUTF8String(i).getBytes
@@ -65,11 +64,6 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashSig", this, classOf[MinHashSigExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
     copy(child = newChild)
 
@@ -77,9 +71,6 @@ case class MinHashSigExpr(child: Expression) extends UnaryExpression {
 }
 
 object MinHashSigExpr {
-  private[plans] val digest = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
 
   /** Fold the 4 big-endian uint32 slices of a digest into mins[base..base+3]. */
   private[plans] def updateMins(mins: Array[Long], base: Int, d: Array[Byte]): Unit = {
@@ -107,11 +98,13 @@ object MinHashSigExpr {
   * arrays.
   */
 case class MinHashWordsExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"minhash_words expects array<string>, got $t")
+  override protected def checkName = "minhash_words"
+  override protected def expects = "array<string>"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(StringType, _)) => true
+    case _ => false
   }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -123,7 +116,7 @@ case class MinHashWordsExpr(child: Expression, k: Int)
   def kernel(words: ArrayData): ArrayData = {
     val n = words.numElements()
     val mins = Array.fill(8)(0xFFFFFFFFL)
-    val md = MinHashSigExpr.digest.get()
+    val md = Md5.get
     // word bytes fetched once per row (null words skip, concat_ws-style)
     val wb = new Array[Array[Byte]](n)
     var i = 0
@@ -173,11 +166,6 @@ case class MinHashWordsExpr(child: Expression, k: Int)
       p += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("minhashWords", this, classOf[MinHashWordsExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashWordsExpr =

@@ -1,10 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RowOrdering, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 
@@ -42,7 +38,7 @@ import org.apache.spark.sql.types._
   * mmr_milli, pick>> in pick order.
   */
 case class MmrPicksExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(k >= 1, s"mmr k must be >= 1, got $k")
 
@@ -51,17 +47,17 @@ case class MmrPicksExpr(child: Expression, k: Int)
     case _ => NullType
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(idF, relF, embF)), _)
-        if relF.dataType == LongType &&
-          (embF.dataType match {
-            case ArrayType(FloatType, _) => true
-            case _ => false
-          }) &&
-          TypeUtils.getInterpretedOrdering(idF.dataType) != null =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_mmr_picks expects array<struct<id, rel_milli: long, embedding: array<float>>>, got $t")
+  override protected def expects = "array<struct<id, rel_milli: long, embedding: array<float>>>"
+  // an id must be orderable (ties pick the smaller id): a map id is a
+  // clean refusal here, not a MatchError from getInterpretedOrdering
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(StructType(Array(idF, relF, embF)), _)) =>
+      relF.dataType == LongType && RowOrdering.isOrderable(idF.dataType) &&
+        (embF.dataType match {
+          case ArrayType(FloatType, _) => true
+          case _ => false
+        })
+    case _ => false
   }
 
   override def dataType: DataType = {
@@ -164,11 +160,6 @@ case class MmrPicksExpr(child: Expression, k: Int)
       p += 1
     }
     new GenericArrayData(out.toArray)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mmrPicks", this, classOf[MmrPicksExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MmrPicksExpr =

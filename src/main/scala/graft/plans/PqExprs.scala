@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -32,7 +31,7 @@ import org.apache.spark.sql.types._
   */
 case class PqArgminExpr(left: Expression, right: Expression, subDim: Int,
                         mode: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with RefKernel {
 
   require(mode >= 0 && mode <= 2, s"graft_pq_argmin mode must be 0..2, got $mode")
 
@@ -52,18 +51,16 @@ case class PqArgminExpr(left: Expression, right: Expression, subDim: Int,
     case _ => false
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType | DoubleType, _),
-          ArrayType(ArrayType(st: StructType, _), _))
-        if st.length >= 2 &&
-          (st.fields(0).dataType == IntegerType || st.fields(0).dataType == LongType) &&
-          (st.fields(1).dataType == ArrayType(FloatType, false) ||
-           st.fields(1).dataType == ArrayType(DoubleType, false) ||
-           st.fields(1).dataType == ArrayType(FloatType, true) ||
-           st.fields(1).dataType == ArrayType(DoubleType, true)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_argmin expects (array<float|double>, array<array<struct<code,svec>>>), got $l / $r")
+  override protected def expects = "(array<float|double>, array<array<struct<code,svec>>>)"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(FloatType | DoubleType, _), ArrayType(ArrayType(st: StructType, _), _)) =>
+      st.length >= 2 &&
+        (st.fields(0).dataType == IntegerType || st.fields(0).dataType == LongType) &&
+        (st.fields(1).dataType match {
+          case ArrayType(FloatType | DoubleType, _) => true
+          case _ => false
+        })
+    case _ => false
   }
 
   override def dataType: DataType = mode match {
@@ -127,11 +124,6 @@ case class PqArgminExpr(left: Expression, right: Expression, subDim: Int,
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqArgmin", this, classOf[PqArgminExpr].getName)
-    nullSafeCodeGen(ctx, ev, (e, c) => s"${ev.value} = $ref.kernel($e, $c);")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqArgminExpr =
     copy(left = newLeft, right = newRight)
@@ -147,13 +139,12 @@ case class PqArgminExpr(left: Expression, right: Expression, subDim: Int,
   * probe join's output, the hottest row count in the ss family).
   */
 case class AdcSumExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelTypeCheck {
 
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(ArrayType(DoubleType, _), _), ArrayType(IntegerType, _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_adc_sum expects (array<array<double>>, array<int>), got $l / $r")
+  override protected def expects = "(array<array<double>>, array<int>)"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(ArrayType(DoubleType, _), _), ArrayType(IntegerType, _)) => true
+    case _ => false
   }
 
   override def dataType: DataType = DoubleType

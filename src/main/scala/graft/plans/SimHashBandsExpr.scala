@@ -1,9 +1,6 @@
 package graft.plans
 
-import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
@@ -35,12 +32,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
   * per row (reference-object pattern) so the enclosing operator keeps
   * its whole-stage span.
   */
-case class SimHashBandsExpr(child: Expression) extends UnaryExpression {
+case class SimHashBandsExpr(child: Expression) extends UnaryExpression with RefKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"simhash_bands expects string, got $t")
-  }
+  override protected def checkName = "simhash_bands"
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -50,7 +46,7 @@ case class SimHashBandsExpr(child: Expression) extends UnaryExpression {
   def kernel(input: Any): GenericArrayData = {
     val toks = input.toString.split(" ", -1)
     val votes = new Array[Int](64)
-    val md = SimHashBandsExpr.digest.get()
+    val md = Md5.get
     var i = 0
     while (i < toks.length) {
       md.reset()
@@ -81,18 +77,8 @@ case class SimHashBandsExpr(child: Expression) extends UnaryExpression {
     new GenericArrayData(bands)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashBands", this, classOf[SimHashBandsExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): SimHashBandsExpr =
     copy(child = newChild)
 
   override def prettyName: String = "graft_simhash_bands"
-}
-
-object SimHashBandsExpr {
-  private val digest: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 }

@@ -1,9 +1,6 @@
 package graft.plans
 
-import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 
 /** Single-pass 16-bit SimHash over a document's text.
@@ -25,12 +22,11 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
   * (reference-object pattern) so the enclosing operator keeps its
   * whole-stage span.
   */
-case class SimHashSigExpr(child: Expression) extends UnaryExpression {
+case class SimHashSigExpr(child: Expression) extends UnaryExpression with RefKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"simhash_sig expects string, got $t")
-  }
+  override protected def checkName = "simhash_sig"
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true
@@ -42,7 +38,7 @@ case class SimHashSigExpr(child: Expression) extends UnaryExpression {
     // split(text, " ") and DuckDB's string_split exactly
     val toks = input.toString.split(" ", -1)
     val votes = new Array[Int](16)
-    val md = SimHashSigExpr.digest.get()
+    val md = Md5.get
     var i = 0
     while (i < toks.length) {
       md.reset()
@@ -65,18 +61,8 @@ case class SimHashSigExpr(child: Expression) extends UnaryExpression {
     sig
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashSig", this, classOf[SimHashSigExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): SimHashSigExpr =
     copy(child = newChild)
 
   override def prettyName: String = "graft_simhash"
-}
-
-object SimHashSigExpr {
-  private val digest: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 }

@@ -1,9 +1,6 @@
 package graft.plans
 
-import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
@@ -26,12 +23,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * is set iff the vote sum of global bit 32*band+k is positive. The
   * DuckDB oracle re-derives all 128 vote sums from md5 hex.
   */
-case class SimHashWideExpr(child: Expression) extends UnaryExpression {
+case class SimHashWideExpr(child: Expression) extends UnaryExpression with RefKernel {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"simhash_wide expects string, got $t")
-  }
+  override protected def checkName = "simhash_wide"
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -41,7 +37,7 @@ case class SimHashWideExpr(child: Expression) extends UnaryExpression {
   def kernel(input: Any): GenericArrayData = {
     val toks = input.toString.split(" ", -1)
     val votes = new Array[Int](128)
-    val md = SimHashWideExpr.digest.get()
+    val md = Md5.get
     var i = 0
     while (i < toks.length) {
       md.reset()
@@ -78,18 +74,8 @@ case class SimHashWideExpr(child: Expression) extends UnaryExpression {
     new GenericArrayData(bands)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("simhashWide", this, classOf[SimHashWideExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): SimHashWideExpr =
     copy(child = newChild)
 
   override def prettyName: String = "graft_simhash_wide"
-}
-
-object SimHashWideExpr {
-  private val digest: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -25,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * filter/projection expressions that reference it per row.
   */
 case class TermCountsExpr(child: Expression, terms: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with KernelTypeCheck {
 
   require(terms.nonEmpty && terms.forall(_.nonEmpty),
     "graft_term_counts needs at least one non-empty term")
@@ -33,10 +32,8 @@ case class TermCountsExpr(child: Expression, terms: Seq[String])
   private lazy val termBytes: Array[Array[Byte]] =
     terms.map(_.getBytes("UTF-8")).toArray
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_term_counts expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullIntolerant: Boolean = true

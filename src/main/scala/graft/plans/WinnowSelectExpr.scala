@@ -1,9 +1,6 @@
 package graft.plans
 
-import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,12 +29,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * pattern) so the enclosing operator keeps its whole-stage span.
   */
 case class WinnowSelectExpr(child: Expression, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
   require(w >= 1, s"winnow window must be >= 1, got $w")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"winnow_select expects array<string>, got $t")
+  override protected def checkName = "winnow_select"
+  override protected def expects = "array<string>"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(StringType, _)) => true
+    case _ => false
   }
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -49,7 +48,7 @@ case class WinnowSelectExpr(child: Expression, w: Int)
   def kernel(sh: ArrayData): ArrayData = {
     val n = sh.numElements()
     if (n == 0) return new GenericArrayData(Array.empty[Any])
-    val md = WinnowSelectExpr.digest.get()
+    val md = Md5.get
     val dg = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) {
@@ -92,11 +91,6 @@ case class WinnowSelectExpr(child: Expression, w: Int)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("winnowSel", this, classOf[WinnowSelectExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
-  }
-
   override protected def withNewChildInternal(newChild: Expression): WinnowSelectExpr =
     copy(child = newChild)
 
@@ -104,9 +98,6 @@ case class WinnowSelectExpr(child: Expression, w: Int)
 }
 
 object WinnowSelectExpr {
-  private val digest = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
   private val hexChars = "0123456789abcdef".toCharArray
 
   private def hex(d: Array[Byte]): String = {

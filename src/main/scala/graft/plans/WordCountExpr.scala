@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -21,12 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * matches `size()` so every caller's schema is unchanged.
   */
 case class WordCountExpr(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelTypeCheck {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_wordcount expects string, got $t")
-  }
+  override protected def expects = "string"
+  override protected def accepts(ts: Seq[DataType]) = ts == Seq(StringType)
 
   override def dataType: DataType = IntegerType
   override def nullIntolerant: Boolean = true

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -28,13 +26,14 @@ import org.apache.spark.unsafe.Platform
   * whole-stage span.
   */
 case class WordGramHashesExpr(child: Expression, k: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with RefKernel {
 
   require(k >= 1, s"gram width must be >= 1, got $k")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_gram_hashes expects array<string>, got $t")
+  override protected def expects = "array<string>"
+  override protected def accepts(ts: Seq[DataType]) = ts match {
+    case Seq(ArrayType(StringType, _)) => true
+    case _ => false
   }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -79,11 +78,6 @@ case class WordGramHashesExpr(child: Expression, k: Int)
       w += 1
     }
     new GenericArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("gramHashes", this, classOf[WordGramHashesExpr].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.kernel($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): WordGramHashesExpr =

@@ -982,7 +982,8 @@ class ApiSpec extends SparkSpec {
       epsMilli = 0L, init = Some(pp))
     val mh = e.kmeansTrain("vec_id", "embedding", k, maxIter = iters,
       epsMilli = 0L)
-    // the seeding pin, measured via DevProbe --kpp on this data: (a)
+    // the seeding pin, measured on this data (both seedings trained
+    // at each budget, final shifts and assignment SSE compared): (a)
     // the D² seed's final shift <= hash's at the same budget (here pp
     // CONVERGES — 0 — while hash is still moving; at tiny budgets the
     // raw-shift comparison is noise because pp seeds are actual corpus

@@ -51,6 +51,63 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
   }
 
+  test("every reference-object kernel compiles under strict codegen and matches interpreted eval, nulls included") {
+    import graft.plans._
+    import org.apache.spark.sql.graft.bridge
+    // inputs derive from the range id, so nothing constant-folds: the
+    // first run is whole-stage codegen, the second interpreted
+    val id = col("id")
+    def pick(xs: org.apache.spark.sql.Column*) = element_at(array(xs: _*), (id + 1).cast("int"))
+    val text = pick(lit("the cat sat on the mat again and again"), lit(""), lit(null).cast("string"))
+    val emb = pick(array(lit(0.5f), lit(-1f), lit(2f), lit(0f)), array(lit(1f), lit(1f), lit(1f), lit(1f)),
+      lit(null).cast("array<float>"))
+    val cents = pick(
+      array(struct(array(lit(1f), lit(0f), lit(2f), lit(0f)).as("cvec"), lit(7).as("c_label")),
+        struct(array(lit(0f), lit(-1f), lit(2f), lit(1f)).as("cvec"), lit(3).as("c_label"))),
+      lit(null).cast("array<struct<cvec:array<float>,c_label:int>>"),
+      array(struct(array(lit(1f)).as("cvec"), lit(1).as("c_label"))))
+    val cb = array(Seq(0, 1).map(m => array(Seq(0, 1).map(k =>
+      struct(lit(k).as("code"), array(lit(k.toFloat), lit(m.toFloat)).as("svec"))): _*)): _*)
+    val shortlist = when(id === 2, lit(null)).otherwise(array(
+      struct(id.as("id"), lit(5L).as("rel"), array(lit(1f), lit(0f)).as("emb")),
+      struct((id + 10).as("id"), lit(3L).as("rel"), array(lit(0f), lit(1f)).as("emb")),
+      struct((id + 20).as("id"), lit(4L).as("rel"), array(lit(0.9f), lit(0.1f)).as("emb"))))
+    val df = spark.range(3).select(text.as("text"), split(text, " ").as("toks"),
+      emb.as("emb"), cents.as("cents"), cb.as("cb"), shortlist.as("sl"))
+    def c(n: String) = bridge.expression(col(n))
+    val kernels = Seq(
+      WordGramMd5Expr(c("text"), 3), TiledLineHashesExpr(c("text"), 2),
+      WinnowTextExpr(c("text"), 3, 4), WordGramXxhTextExpr(c("text"), 3),
+      MinHashSigExpr(c("toks")), MinHashWordsExpr(c("toks"), 3), WinnowSelectExpr(c("toks"), 4),
+      WordGramHashesExpr(c("toks"), 3), SimHashSigExpr(c("text")), SimHashBandsExpr(c("text")),
+      SimHashWideExpr(c("text")), BigramCountsExpr(c("text")), CdcChunksExpr(c("text")),
+      CdcCutsExpr(c("text")), LexiconCountsExpr(c("text"), Seq(Seq("the", "on"), Seq("cat"))),
+      TokenProfileExpr(c("text"), Seq("the")), MmrPicksExpr(c("sl"), 2),
+      PqArgminExpr(c("emb"), c("cb"), 2, 0), PqArgminExpr(c("emb"), c("cb"), 2, 1),
+      PqArgminExpr(c("emb"), c("cb"), 2, 2),
+      CellArgminExpr(c("emb"), c("cents"), "cvec", "c_label", "d2", "cell"))
+    val cols = kernels.map(k => to_json(struct(bridge.column(k).as("v"))).as(k.toString))
+    def run(): Seq[Seq[String]] = df.select(cols: _*).collect().toSeq.map(_.toSeq.map(String.valueOf))
+    val codegen = try {
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      val p = df.select(cols: _*).queryExecution.executedPlan
+      assert(p.find(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).nonEmpty,
+        s"kernels must run inside whole-stage codegen:\n$p")
+      run()
+    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+    val interpreted = try {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      run()
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    kernels.indices.foreach { k =>
+      assert(codegen.map(_(k)) == interpreted.map(_(k)), s"${kernels(k).prettyName}")
+    }
+  }
+
   test("ss03/ss05 centroid assignment is a zero-shuffle per-row argmin") {
     // The round-1 crossJoin+row_number form shuffled and sorted the
     // L-times-expanded corpus on vec_id just to take an argmin. The
@@ -339,36 +396,26 @@ class PlanSpec extends SparkSpec {
   }
 
   test("golden plan shapes: the shuffle/join topology of EVERY query is pinned") {
-    // Counts of the plan nodes that cost money at 100 TB, per query.
-    // A new Exchange, Window sort, or a broadcast silently flipping to
-    // SortMergeJoin is a scale regression even when results stay
-    // correct — this pins the topology. Regenerate after an
-    // INTENTIONAL plan change with: GRAFT_REGEN_GOLDEN=1 sbt test
-    // (tests fork, so an env var reaches them; -D does not)
-    val goldenPath = "/root/repo/src/test/resources/plan_golden.txt"
-    val markers = Seq(
-      "exch" -> "Exchange hashpartitioning",
-      "range" -> "Exchange rangepartitioning",
-      "win" -> "Window [",
-      "smj" -> "SortMergeJoin",
-      "bhj" -> "BroadcastHashJoin",
-      "bnlj" -> "BroadcastNestedLoopJoin",
-      "cache" -> "InMemoryTableScan")
-    def count(hay: String, needle: String): Int =
-      hay.sliding(needle.length).count(_ == needle)
+    // PlanShape's signature per query, against the pinned file.
+    // Regenerate after an INTENTIONAL plan change with:
+    // GRAFT_REGEN_GOLDEN=1 sbt test (tests fork, so an env var reaches
+    // them; -D does not)
     // Start from a clean cache: earlier tests persist subtrees (ss05/
     // ss06 centroids) that would otherwise leak InMemoryTableScans
     // into OTHER queries' plans and make the signature order-dependent.
     spark.sharedState.cacheManager.clearCache()
     val live = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val p = plan(name)
-      name + " " + markers.map { case (k, m) => s"$k=${count(p, m)}" }.mkString(" ")
+      name + " " + PlanShape.signature(plan(name))
     }
-    val f = new java.io.File(goldenPath)
-    if (sys.env.get("GRAFT_REGEN_GOLDEN").contains("1") || !f.exists) {
+    val f = PlanShape.goldenFile
+    if (sys.env.get("GRAFT_REGEN_GOLDEN").contains("1")) {
       val w = new java.io.PrintWriter(f, "UTF-8")
       live.foreach(w.println); w.close()
     }
+    // a missing golden must fail, not be written from the live plans
+    // and then compared with itself
+    assert(f.exists, s"${f.getAbsolutePath} missing — run from the repo root, or regenerate " +
+      "with GRAFT_REGEN_GOLDEN=1 sbt test")
     val golden = {
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().toList finally src.close()

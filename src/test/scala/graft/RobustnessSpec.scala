@@ -293,4 +293,33 @@ class RobustnessSpec extends SparkSpec {
     assert(failures.isEmpty,
       s"queries must be total under null text/embeddings:\n${failures.mkString("\n")}")
   }
+
+  test("every reference-object kernel refuses a wrong input type with an AnalysisException") {
+    import graft.plans._
+    import org.apache.spark.sql.graft.bridge
+    val df = spark.range(1).select(lit(1).as("i"), lit("a b").as("s"),
+      array(struct(map(lit(1), lit(2)).as("id"), lit(1L).as("rel"),
+        array(lit(1f)).as("emb"))).as("map_ids"))
+    def c(n: String) = bridge.expression(col(n))
+    val (i, s) = (c("i"), c("s"))
+    val wrong = Seq(
+      WordGramMd5Expr(i, 3), TiledLineHashesExpr(i, 2), WinnowTextExpr(i, 3, 4),
+      WordGramXxhTextExpr(i, 3), MinHashSigExpr(s), MinHashWordsExpr(s, 3),
+      WinnowSelectExpr(s, 4), WordGramHashesExpr(s, 3), SimHashSigExpr(i),
+      SimHashBandsExpr(i), SimHashWideExpr(i), BigramCountsExpr(i), CdcChunksExpr(i),
+      CdcCutsExpr(i), LexiconCountsExpr(i, Seq(Seq("a"))), TokenProfileExpr(i, Seq("a")),
+      MmrPicksExpr(c("map_ids"), 2), PqArgminExpr(s, i, 2, 0), PqArgminExpr(s, i, 2, 1),
+      PqArgminExpr(s, i, 2, 2), CellArgminExpr(s, i, "cvec", "c_label", "d2", "cell"))
+    val unclean = wrong.flatMap { e =>
+      try { df.select(bridge.column(e).as("x")); Some(s"${e.prettyName}: analyzed") }
+      catch {
+        case _: org.apache.spark.sql.AnalysisException => None
+        case t: Throwable => Some(s"${e.prettyName}: ${t.getClass.getName}")
+      }
+    }
+    assert(unclean.isEmpty, unclean.mkString("\n"))
+    // an orderable id still analyzes
+    df.select(bridge.column(MmrPicksExpr(bridge.expression(
+      array(struct(lit(1L).as("id"), lit(1L).as("rel"), array(lit(1f)).as("emb")))), 2)))
+  }
 }
